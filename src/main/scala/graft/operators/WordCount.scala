@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.sources.Tables
+import scala.util.Using
 
 /** The reference engine's one and only query — per-key word count — plus
   * its natural generalizations, as one lazy Spark plan.
@@ -25,9 +26,21 @@ import graft.sources.Tables
 object WordCount {
 
   /** Tokenized (key, word) pairs: one row per emitted token, the Spark
-    * analog of the reference's `(word, 1, partitionNum)` tuple stream. */
+    * analog of the reference's `(word, 1, partitionNum)` tuple stream.
+    *
+    * Per-row expressions go in a `select` of their own BELOW the explode.
+    * Spark's analyzer moves every non-generator expression of a
+    * generator-select into a `Project` above the `Generate`, so a key
+    * computed there (the registry's `regexp_extract(file, "[^/]+$", 0)`)
+    * would run once per generated TOKEN (about 8.7 times per line on the
+    * benchmark corpus) instead of once per line. `tokenize` itself stays inside the
+    * generator: exploding a pre-projected array column lets
+    * `InferFiltersFromGenerate` add a `size(tokenize(text)) > 0` filter
+    * below the `Generate`, which tokenizes every line twice. */
   def tokens(df: DataFrame, key: Column, text: Column): DataFrame =
-    Tables.fanOut(df).select(key.as("key"), explode(tokenize(text)).as("word"))
+    Tables.fanOut(df)
+      .select(key.as("key"), text.as("text"))
+      .select(col("key"), explode(tokenize(col("text"))).as("word"))
 
   /** Per-key word count — the reference's end-to-end query. */
   def perKey(df: DataFrame, key: Column, text: Column): DataFrame =
@@ -109,15 +122,17 @@ object WordCount {
     writePerFile(counts, staging)
     val finalDir = Paths.get(outDir, "final_output")
     Files.createDirectories(finalDir)
-    val stagingDir = Paths.get(staging)
-    Files.list(stagingDir).forEach { keyDir =>
-      val name = keyDir.getFileName.toString
-      if (name.startsWith("key=")) {
-        val part = Files.list(keyDir)
-          .filter(p => p.getFileName.toString.startsWith("part-")).findFirst()
-        if (part.isPresent) {
-          Files.move(part.get(), finalDir.resolve(name.stripPrefix("key=")),
-            StandardCopyOption.REPLACE_EXISTING)
+    Using.resource(Files.list(Paths.get(staging))) { keyDirs =>
+      keyDirs.forEach { keyDir =>
+        val name = keyDir.getFileName.toString
+        if (name.startsWith("key=")) {
+          val part = Using.resource(Files.list(keyDir)) {
+            _.filter(p => p.getFileName.toString.startsWith("part-")).findFirst()
+          }
+          if (part.isPresent) {
+            Files.move(part.get(), finalDir.resolve(name.stripPrefix("key=")),
+              StandardCopyOption.REPLACE_EXISTING)
+          }
         }
       }
     }

@@ -1,7 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.{col, regexp_extract}
+import org.apache.spark.sql.catalyst.expressions.RegExpExtract
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.{col, count, explode, lit, regexp_extract}
+import graft.functions.TextFunctions.tokenize
+import graft.functions.expr.LowerRemovePunc
 import graft.operators.WordCount
 import graft.sources.Tables
 import java.nio.file.Files
@@ -11,7 +16,7 @@ import java.nio.file.Files
   * (the reference's 2000-line split is an arbitrary parallelism knob —
   * results must not depend on it).
   */
-class WordCountSpec extends AnyFunSuite {
+class WordCountSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val spark = SparkTestSession.spark
 
   private def perFileCounts(dir: String): Map[(String, String), Long] =
@@ -70,5 +75,43 @@ class WordCountSpec extends AnyFunSuite {
     assert(one("line1") == 1L)
     assert(counts(3) == one)
     assert(counts(7) == one)
+  }
+
+  private val fileKey = regexp_extract(col("file"), "[^/]+$", 0)
+  private def fixtureScans = Seq(
+    "text" -> Tables.textCorpus(spark, SparkEntry.PerFileCorpus),
+    "graft-lines" -> spark.read.format("graft-lines").load(SparkEntry.PerFileCorpus))
+
+  test("tokens evaluates a computed key once per line, below the Generate") {
+    for ((scan, df) <- fixtureScans) {
+      val plan = WordCount.tokens(df, fileKey, col("line"))
+        .queryExecution.executedPlan
+      val gens = collect(plan) { case g: GenerateExec => g }
+      assert(gens.size == 1, s"$scan: $plan")
+      val below: Seq[SparkPlan] = collect(gens.head.child) { case n => n }
+      val keyNodes = collect(plan) {
+        case n if n.expressions.exists(_.exists(_.isInstanceOf[RegExpExtract])) => n
+      }
+      assert(keyNodes.nonEmpty, s"$scan: $plan")
+      assert(keyNodes.forall(n => below.exists(_ eq n)),
+        s"$scan: the key is evaluated above the Generate\n$plan")
+      val normalizes = collect(plan) { case n => n }
+        .flatMap(_.expressions.flatMap(_.collect { case e: LowerRemovePunc => e }))
+        .size
+      assert(normalizes == 1, s"$scan: graft_normalize x$normalizes\n$plan")
+      assert(collect(gens.head.child) { case f: FilterExec => f }.isEmpty,
+        s"$scan: a Filter sits below the Generate\n$plan")
+    }
+  }
+
+  test("perKey equals the single-select formulation on the fixture corpus") {
+    for ((scan, df) <- fixtureScans) {
+      val mine = WordCount.perKey(df, fileKey, col("line"))
+      val reference = Tables.fanOut(df)
+        .select(fileKey.as("key"), explode(tokenize(col("line"))).as("word"))
+        .groupBy("key", "word").agg(count(lit(1)).as("cnt"))
+      val (m, r) = (mine.collect(), reference.collect())
+      assert(m.nonEmpty && m.length == r.length && m.toSet == r.toSet, scan)
+    }
   }
 }
