@@ -1,12 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.multimodal.Multimodal
+import graft.operators.{Dedup, Layout, ScaleTechniques, SimSearch, TextAnalysis}
 
 /** Benchmark main. Two fixes over the naive loop:
   *
   *  - every query is WARMED UP first on sf0.001 (JIT + codegen compile +
   *    parquet footer caches), so the first measured query doesn't eat all
-  *    JVM warmup;
+  *    JVM warmup; the same warm-up discovers which declared builds each
+  *    query reads ([[discover]]);
   *  - evaluation is forced through a `noop` format write, not `count()` —
   *    under `count()` Catalyst drops top-level sorts and unreferenced
   *    projections, under-measuring exactly the expensive operators.
@@ -15,23 +18,96 @@ import org.apache.spark.sql.SparkSession
   * diagnostics go to stderr.
   */
 object Bench {
+  type Build = (SparkSession, String) => Unit
+
+  /** The declared builds, in run and output order: one `build:*` row per
+    * shared artifact; the warm-up discovers which queries read each.
+    *
+    * The memoized dedup subplans (pair graph + component labels) are
+    * measured EXPLICITLY: each measured pass starts cold (clearMemos)
+    * and charges the builds to synthetic `build:*` entries, so the four
+    * consumer queries' numbers are honest cached-read costs, the build
+    * cost is visible in its own row, and the sum of reported numbers
+    * reconciles with the pass's wall time. (Without this, min-of-two
+    * reported only cache reads and the build cost vanished — BENCH_r04's
+    * q_dedup_* numbers were unusable for regression tracking.) */
+  private[graft] val builds: Seq[(String, Build)] = Seq(
+    ("build:minhash_pairs", (s, d) => Dedup.minhashPairsCached(s, d)),
+    ("build:components", (s, d) => Dedup.componentsCached(s, d)),
+    // split per r11 directive #5: train is corpus-FLAT (sampled
+    // quantizer/codebook), encode is corpus-LINEAR by nature — one
+    // row each so the pair attributes the 17 consumers' build cost
+    // honestly (train must run first: encode reads its artifacts)
+    ("build:ann_train", SimSearch.buildAnnTrain),
+    ("build:ann_encode", SimSearch.buildAnnEncode),
+    ("build:bpe_merges", TextAnalysis.bpeMergesFrame),
+    ("build:lr_model", TextAnalysis.lrModelCached),
+    // the per-domain bigram-LM census both doremi rows read (r14):
+    // charged here so q_mix_doremi / q_mix_doremi_draw measure the
+    // |domains|-sized tails, and the shared corpus pass is visible
+    ("build:bigram_ll", TextAnalysis.bigramDomCached),
+    // the partitioned fact layout is a per-snapshot write-time
+    // artifact; clearMemos released it, so rebuild it here —
+    // q_join_dpp's own number is then the pruned-read serving cost
+    ("build:dpp_layout", ScaleTechniques.buildDppLayout),
+    // the z-prefix block layout is a per-snapshot write-time
+    // artifact like the DPP layout; the footer audit's own number
+    // is then the manifest-read cost alone
+    ("build:zorder_blocks", Layout.buildZorderBlocks),
+    // the fragmented-docs fixture feeds the compaction audit and
+    // both Bloom-index arms; charged here so their own numbers are
+    // serving/rewrite cost alone
+    ("build:frag_layout", Layout.buildFragLayout),
+    ("build:hilbert_blocks", Layout.buildHilbertBlocks),
+    // the catalog fingerprint indexes the incremental media screens
+    // probe — decoded once per snapshot, the screens' own numbers
+    // are then the O(batch) decode + probe cost
+    ("build:media_index", (s, d) => {
+      Multimodal.phashCatalogIndexCached(s, d)
+      Multimodal.audioCatalogIndexCached(s, d)
+      Multimodal.videoCatalogIndexCached(s, d) }))
+
+  /** The warm-up: every build from cold, then every query, each step
+    * recording the memo keys and layout paths it touches. The first build
+    * to touch a key owns it. A step needs the owners of the keys it
+    * touches, other than itself, and what those owners need (an earlier
+    * build each). `run` runs one step; returns each query's needs. */
+  private[graft] def discover(builds: Seq[(String, Build)], queries: Seq[(String, Build)])
+      (run: (String, Build) => Unit): Map[String, Set[String]] = {
+    Dedup.clearMemos()
+    val buildTouches = builds.map { case (n, b) => n -> Dedup.recordTouches(run(n, b)) }
+    val queryTouches = queries.map { case (n, b) => n -> Dedup.recordTouches(run(n, b)) }
+    val owner = buildTouches.reverse.flatMap { case (b, ks) => ks.map(_ -> b) }.toMap
+    val direct = (buildTouches ++ queryTouches).toMap
+      .map { case (n, ks) => n -> (ks.flatMap(owner.get) - n) }
+    def closure(n: String): Set[String] = direct(n).flatMap(b => closure(b) + b)
+    queryTouches.map { case (q, _) => q -> closure(q) }.toMap
+  }
+
+  /** The declared builds some query in `names` needs, in list order. */
+  private[graft] def selected[T](builds: Seq[(String, T)],
+      need: Map[String, Set[String]], names: Seq[String]): Seq[(String, T)] =
+    builds.filter { case (b, _) => names.exists(need(_)(b)) }
+
+  /** Per-row minimum over the measured passes, with the total and each
+    * pass's failed rows. A failed run reads -1 and never as fast: a row
+    * that failed in some passes reports the others, and a row that
+    * failed in all of them reports -1 and stays out of the total. */
+  private[graft] def merge(order: Seq[String], passes: Seq[Map[String, Double]])
+      : (Seq[(String, Double)], Double, Seq[Seq[String]]) = {
+    val rows = order.map(n =>
+      n -> passes.map(_(n)).filter(_ >= 0).minOption.getOrElse(-1.0))
+    (rows, rows.map(_._2).filter(_ >= 0).sum, passes.map(p => order.filter(p(_) < 0)))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmDir = "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(LocalSession.cpus(4))
     // start from a clean slate: a prior invocation's fingerprint-keyed
     // layout artifacts (same immutable corpus ⇒ same key) would make
     // this invocation's build:* rows measure a load, not the build
-    graft.operators.ScaleTechniques.sweepStaleLayouts()
+    ScaleTechniques.sweepStaleLayouts()
 
     // Untimed full GC in the gap before every measured query. On this
     // heap (32g of a 125 GiB box) organic old-gen collections are rare,
@@ -43,114 +119,20 @@ object Bench {
     // 24g→32g heap raise. The GC runs OUTSIDE the timed region, so it
     // spends untimed wall to keep each measurement starting from a
     // clean heap, the state a per-job cluster run would see.
-    def gcGap(): Unit = System.gc()
-
-    def run(name: String, dir: String): Double = {
-      gcGap()
+    def timed(name: String)(body: => Unit): Double = {
+      System.gc()
       val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          -1.0
+      try { body; (System.nanoTime() - t0) / 1e9 }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        -1.0
       }
-    }
-
-    // The memoized dedup subplans (pair graph + component labels) are
-    // measured EXPLICITLY: each measured pass starts cold (clearMemos)
-    // and charges the builds to synthetic `build:*` entries, so the four
-    // consumer queries' numbers are honest cached-read costs, the build
-    // cost is visible in its own row, and the sum of reported numbers
-    // reconciles with the pass's wall time. (Without this, min-of-two
-    // reported only cache reads and the build cost vanished — BENCH_r04's
-    // q_dedup_* numbers were unusable for regression tracking.)
-    def buildEntries(dir: String, minhash: Boolean,
-        ann: Boolean, bpe: Boolean, lr: Boolean,
-        dpp: Boolean, media: Boolean, zblocks: Boolean,
-        frag: Boolean, hblocks: Boolean, bigram: Boolean): Seq[(String, Double)] = {
-      import graft.operators.Dedup
-      Dedup.clearMemos()
-      def timed(label: String)(body: => Unit): (String, Double) = {
-        gcGap()
-        val t0 = System.nanoTime()
-        try { body; label -> (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          label -> -1.0
-        }
-      }
-      (if (minhash) Seq(
-        timed("build:minhash_pairs") { Dedup.minhashPairsCached(spark, dir); () },
-        timed("build:components") { Dedup.componentsCached(spark, dir); () })
-       else Seq.empty) ++
-      (if (ann) Seq(
-        // split per r11 directive #5: train is corpus-FLAT (sampled
-        // quantizer/codebook), encode is corpus-LINEAR by nature — one
-        // row each so the pair attributes the 17 consumers' build cost
-        // honestly (train must run first: encode reads its artifacts)
-        timed("build:ann_train") {
-          graft.operators.SimSearch.buildAnnTrain(spark, dir) },
-        timed("build:ann_encode") {
-          graft.operators.SimSearch.buildAnnEncode(spark, dir) })
-       else Seq.empty) ++
-      (if (bpe) Seq(
-        timed("build:bpe_merges") {
-          graft.operators.TextAnalysis.bpeMergesFrame(spark, dir); () })
-       else Seq.empty) ++
-      (if (lr) Seq(
-        timed("build:lr_model") {
-          graft.operators.TextAnalysis.lrModelCached(spark, dir); () })
-       else Seq.empty) ++
-      (if (bigram) Seq(
-        // the per-domain bigram-LM census both doremi rows read (r14):
-        // charged here so q_mix_doremi / q_mix_doremi_draw measure the
-        // |domains|-sized tails, and the shared corpus pass is visible
-        timed("build:bigram_ll") {
-          graft.operators.TextAnalysis.bigramDomCached(spark, dir); () })
-       else Seq.empty) ++
-      (if (dpp) Seq(
-        // the partitioned fact layout is a per-snapshot write-time
-        // artifact; clearMemos released it above, so rebuild it here —
-        // q_join_dpp's own number is then the pruned-read serving cost
-        timed("build:dpp_layout") {
-          graft.operators.ScaleTechniques.buildDppLayout(spark, dir) })
-       else Seq.empty) ++
-      (if (zblocks) Seq(
-        // the z-prefix block layout is a per-snapshot write-time
-        // artifact like the DPP layout; the footer audit's own number
-        // is then the manifest-read cost alone
-        timed("build:zorder_blocks") {
-          graft.operators.Layout.buildZorderBlocks(spark, dir) })
-       else Seq.empty) ++
-      (if (frag) Seq(
-        // the fragmented-docs fixture feeds the compaction audit and
-        // both Bloom-index arms; charged here so their own numbers are
-        // serving/rewrite cost alone
-        timed("build:frag_layout") {
-          graft.operators.Layout.buildFragLayout(spark, dir) })
-       else Seq.empty) ++
-      (if (hblocks) Seq(
-        timed("build:hilbert_blocks") {
-          graft.operators.Layout.buildHilbertBlocks(spark, dir) })
-       else Seq.empty) ++
-      (if (media) Seq(
-        // the catalog fingerprint indexes the incremental media screens
-        // probe — decoded once per snapshot, the screens' own numbers
-        // are then the O(batch) decode + probe cost
-        timed("build:media_index") {
-          graft.multimodal.Multimodal.phashCatalogIndexCached(spark, dir)
-          graft.multimodal.Multimodal.audioCatalogIndexCached(spark, dir)
-          graft.multimodal.Multimodal.videoCatalogIndexCached(spark, dir); () })
-       else Seq.empty)
     }
 
     // SPARK_GRAFT_ONLY=q_a,q_b limits the run to named queries — the
-    // single-query regression-chase mode. The memo builds still run
-    // whenever a selected query consumes the memoized pair/label frames,
-    // so a filtered number means the same thing as a full-run number.
+    // single-query regression-chase mode. The builds a selected query
+    // reads still run, so a filtered number means the same thing as a
+    // full-run number.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // fail LOUDLY on names that match nothing — a typo would otherwise
@@ -162,118 +144,43 @@ object Bench {
     }
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    // every registered query that reads minhashPairsCached/componentsCached
-    // (callers: minhashLsh, editDistanceVerify, dedupedCorpus* ×3,
-    // nearDupComponents, leakageSafeSplit) — keep in sync with
-    // Dedup.scala's memo call sites
-    val memoConsumers = Set("q_dedup_minhash_lsh", "q_dedup_editdist",
-      "q_dedup_clusters", "q_dedup_keep_set", "q_dedup_keep_clustered",
-      "q_dedup_keep_best", "q_split_leakage_safe")
-    // every registered query that reads the memoized ANN index frames
-    // (SimSearch kmCentsCached/kmRankedCached/pqBookCached/pqCodesCached
-    // call sites — the (spark, dir) entry points)
-    val annConsumers = Set("q_ann_kmeans", "q_ann_kmeans_routed",
-      "q_ann_pq", "q_ann_pq_recall", "q_ann_ivfadc", "q_ann_ivfadc_refine",
-      "q_ann_opq", "q_dedup_semantic", "q_train_hard_negatives",
-      "q_train_hard_negatives_routed", "q_ann_index_merge",
-      // the pruned k-center arms route their update through the
-      // semAssignment cells + the memoized cell geometry
-      "q_sample_kcenter", "q_sample_kcenter_batch")
-    // consumers of the memoized BPE merge table (TextAnalysis
-    // bpeMergesFrame call sites)
-    val bpeConsumers = Set("q_text_bpe_train", "q_text_bpe_apply")
-    // consumers of the memoized LR weight frame (lrModelCached call sites)
-    val lrConsumers = Set("q_train_quality_lr", "q_train_quality_lr_apply",
-      "q_train_quality_lr_calibration")
-    // consumers of the memoized per-domain bigram-LM census
-    // (TextAnalysis.bigramDomCached call sites)
-    val bigramConsumers = Set("q_mix_doremi", "q_mix_doremi_draw")
-    // consumers of the on-disk partitioned DPP fact layout
-    val dppConsumers = Set("q_join_dpp")
-    // consumers of the on-disk z-prefix block layout
-    val zblockConsumers = Set("q_zorder_pruning_files", "q_zorder_ingest",
-      "q_zorder_forget",
-      // the file bake-off reads the published z layout as its contrast arm
-      "q_hilbert_pruning_files")
-    // consumers of the fragmented-docs fixture layout
-    val fragConsumers = Set("q_layout_compaction", "q_layout_bloom_files",
-      "q_layout_bloom_ingest", "q_layout_bloom_forget")
-    // consumers of the hilbert block layout
-    val hblockConsumers = Set("q_hilbert_pruning_files",
-      "q_hilbert_ingest", "q_hilbert_forget")
-    // consumers of the memoized media catalog fingerprint indexes
-    // (Multimodal phashCatalogIndexCached/audioCatalogIndexCached/
-    // videoCatalogIndexCached — since r10 the full-pairs arms recover
-    // their base half from the index too)
-    val mediaConsumers = Set("q_multimodal_phash_inc", "q_multimodal_audio_inc",
-      "q_multimodal_video_inc", "q_multimodal_phash_pairs",
-      "q_multimodal_audio_fp", "q_multimodal_video_fp")
-    val needBuilds = names.exists(memoConsumers)
-    val needAnnBuild = names.exists(annConsumers)
-    val needBpeBuild = names.exists(bpeConsumers)
-    val needLrBuild = names.exists(lrConsumers)
-    val needDppBuild = names.exists(dppConsumers)
-    val needMediaBuild = names.exists(mediaConsumers)
-    val needZblockBuild = names.exists(zblockConsumers)
-    val needFragBuild = names.exists(fragConsumers)
-    val needHblockBuild = names.exists(hblockConsumers)
-    val needBigramBuild = names.exists(bigramConsumers)
-    def builds(dir: String): Seq[(String, Double)] =
-      if (needBuilds || needAnnBuild || needBpeBuild || needLrBuild ||
-          needDppBuild || needMediaBuild || needZblockBuild ||
-          needFragBuild || needHblockBuild || needBigramBuild)
-        buildEntries(dir, needBuilds, needAnnBuild, needBpeBuild, needLrBuild,
-          needDppBuild, needMediaBuild, needZblockBuild,
-          needFragBuild, needHblockBuild, needBigramBuild)
-      else Seq.empty
-    builds(warmDir)
-    names.foreach(run(_, warmDir)) // warmup pass, not measured
+    val queries: Seq[(String, Build)] = names.map(n => (n, (s, d) =>
+      SparkEntry.queries(n)(s, d).write.format("noop").mode("overwrite").save()))
+    val need = discover(builds, queries)((n, b) => timed(n)(b(spark, warmDir))) // not measured
+    builds.foreach { case (b, _) =>
+      System.err.println(s"[bench] consumers $b <- ${names.filter(need(_)(b)).mkString(", ")}")
+    }
+    val rows = selected(builds, need, names) ++ queries
     // Two measured passes at the target SF, keep the per-query MIN: the
     // first pass charges cold OS page-cache / parquet-footer I/O to
     // whichever queries happen to run first (alphabetical), which
     // manufactured phantom round-over-round regressions. The min of two
     // warm-ish runs is the steady-state number a cluster would see.
-    def pass(): Map[String, Double] =
-      (builds(sfDir) ++ names.map(n => n -> run(n, sfDir))).toMap
-    val pass1 = pass()
-    val pass2 = pass()
-    val allNames =
-      (if (needBuilds) Seq("build:minhash_pairs", "build:components")
-       else Seq.empty) ++
-      (if (needAnnBuild) Seq("build:ann_train", "build:ann_encode") else Seq.empty) ++
-      (if (needBpeBuild) Seq("build:bpe_merges") else Seq.empty) ++
-      (if (needLrBuild) Seq("build:lr_model") else Seq.empty) ++
-      (if (needBigramBuild) Seq("build:bigram_ll") else Seq.empty) ++
-      (if (needDppBuild) Seq("build:dpp_layout") else Seq.empty) ++
-      (if (needFragBuild) Seq("build:frag_layout") else Seq.empty) ++
-      (if (needHblockBuild) Seq("build:hilbert_blocks") else Seq.empty) ++
-      (if (needZblockBuild) Seq("build:zorder_blocks") else Seq.empty) ++
-      (if (needMediaBuild) Seq("build:media_index") else Seq.empty) ++ names
-    val results = allNames.map { n =>
-      val t1 = pass1(n)
-      val t2 = pass2(n)
-      n -> (if (t1 < 0) t2 else if (t2 < 0) t1 else math.min(t1, t2))
+    def pass(): Map[String, Double] = {
+      Dedup.clearMemos()
+      rows.map { case (n, b) => n -> timed(n)(b(spark, sfDir)) }.toMap
     }
+    val passes = Seq(pass(), pass())
+    val (results, total, failed) = merge(rows.map(_._1), passes)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val failedJson = failed.zipWithIndex.map { case (f, i) =>
+      s""""pass${i + 1}": ${f.map("\"" + _ + "\"").mkString("[", ", ", "]")}"""
+    }.mkString("{", ", ", "}")
     // Durable full artifact alongside the one-line stdout contract: the
     // driver captures only the TAIL of stdout, and at 130+ queries the
     // single line outgrew it — BENCH_r05's committed artifact held 65 of
     // ~132 entries and the alphabetically-first `build:*` rows vanished.
     // The file is the regression-tracking record (committed per round);
-    // stdout stays the driver's parse target. One entry per line, sorted,
-    // with both measured passes kept so cold-vs-warm spread is visible.
+    // stdout stays the driver's parse target. One entry per line, builds
+    // in list order then queries by name, with both measured passes kept
+    // so cold-vs-warm spread is visible.
     // default is cwd-relative (sbt runs from the repo root), so a
     // different checkout location still lands the artifact in-repo
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     val lines = results.map { case (k, v) =>
-      s"""  "$k": {"min": $v, "pass1": ${pass1(k)}, "pass2": ${pass2(k)}}"""
+      s"""  "$k": {"min": $v, "pass1": ${passes(0)(k)}, "pass2": ${passes(1)(k)}}"""
     }
-    // n_queries counts REGISTERED queries only — the synthetic build:*
-    // rows are accounting, and including them made the count jump when
-    // needBuilds flips (e.g. under SPARK_GRAFT_ONLY subsets)
-    val nQueries = results.count(!_._1.startsWith("build:"))
     // Ambient-contention stamp (VERDICT r10 directive #7): the r10
     // driver tail ran 1.13× over r9 across common queries while the
     // committed same-vintage pair improved — with the box's load
@@ -296,15 +203,17 @@ object Bench {
           }
         }
       catch { case _: Throwable => -1 }
+    // n_queries counts REGISTERED queries only — the synthetic build:*
+    // rows are accounting, and their number varies with SPARK_GRAFT_ONLY
     val fullJson = lines.mkString(
-      s"""{\n  "_meta": {"metric": "total", "value": $total, "unit": "sec", "sf": "$sfDir", "n_queries": $nQueries, "load": {"load1": $load1, "n_jvms": $nJvms}},\n""",
+      s"""{\n  "_meta": {"metric": "total", "value": $total, "unit": "sec", "sf": "$sfDir", "n_queries": ${names.size}, "load": {"load1": $load1, "n_jvms": $nJvms}, "failed": $failedJson},\n""",
       ",\n", "\n}\n")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable =>
       System.err.println(s"[bench] full-artifact write failed: ${e.getMessage}")
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","failed":$failedJson}""")
     spark.stop()
   }
 }

@@ -111,15 +111,7 @@ object Scale {
         s"(known: ${knownSections.toSeq.sorted.mkString(", ")})")
     val plain = args.filterNot(_.startsWith("--"))
     val factors = if (plain.length > 1) plain.drop(1).toSeq.map(_.toInt) else Seq(1, 3, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(LocalSession.cpus(32))
 
     def timedCount(df: DataFrame): (Long, Double) = {
       val t0 = System.nanoTime()
@@ -1321,7 +1313,7 @@ object Scale {
     // PRUNED k-center (the round-10 fix for the round-9 perf-weak
     // grade): same replicated geometry, quantizer derived exactly as
     // the registered arm derives it (kmeansAssignment at
-    // semDerivedK(n), built UNTIMED — it is a build:ann_index
+    // semDerivedK(n), built UNTIMED — it is a build:ann_encode
     // artifact). Claims: (1) the center sequence is bit-identical to
     // exact Gonzalez at every factor; (2) wall growth is well under
     // the exact arm's ~linear; (3) the triangle bound skips a measured,

@@ -588,53 +588,53 @@ object Dedup {
     * (a session building these queries is a dedup pipeline run; the
     * pairs are its working set). Deterministic content (md5-derived
     * hashes, no rand/mii) means the cache can never go stale for a
-    * fixed corpus dir.
-    *
-    * Lifecycle contract: keys are `sessionUUID#dir` — unique per session,
-    * so a new session can never receive a frame bound to a dead one.
-    * Entries for stopped sessions are swept (and their storage freed) on
-    * every cached access; [[clearMemos]] frees everything eagerly (bench
-    * and test hook, and the release valve for long-lived sessions whose
-    * corpus dir CONTENTS changed — the memo key is the path, not the
-    * data). Honors [[CheckpointDirConf]] for executor-loss-tolerant
-    * materialization. */
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, MemoEntry]()
-  private[graft] def minhashPairsCached(spark: SparkSession, dir: String): DataFrame = {
-    sweepStopped()
-    pairsMemo.computeIfAbsent(memoKey(spark, dir), _ => {
-      val ckpt = confCheckpointDir(spark)
-      withCheckpointDir(spark, ckpt) {
-        val (df, rdd) = materializeOwned(minhashPairsPlan(spark, dir), ckpt.isDefined)
-        MemoEntry(df, spark, () => retire(spark, rdd))
-      }
-    }).df
-  }
+    * fixed corpus dir. An ordinary [[memoizedFrame]] key. */
+  private[graft] def minhashPairsCached(spark: SparkSession, dir: String): DataFrame =
+    memoizedFrame(spark, s"minhash_pairs#$dir")(minhashPairsPlan(spark, dir))
 
   /** Generic per-(session, key) memo of an eagerly-materialized frame —
-    * the [[minhashPairsCached]] pattern opened to other operator
-    * families (the ANN index frames live here via
-    * `SimSearch.annIndexCached`). Same lifecycle contract: swept on
-    * access, freed by [[clearMemos]], honors [[CheckpointDirConf]].
-    * Builds run OUTSIDE the map's mapping function (the
-    * [[componentsCached]] discipline) because a build may consult
-    * another memoized frame, whose stopped-session sweep iterates —
-    * and may mutate — this map; the benign same-key race just releases
-    * the losing build. */
+    * the minhash pair graph, the component labels, the ANN index frames
+    * and every other shared operator artifact live here.
+    *
+    * Lifecycle contract: keys are `sessionUUID#key` — unique per
+    * session, so a new session can never receive a frame bound to a
+    * dead one. Entries for stopped sessions are swept (and their
+    * storage freed) on every cached access; [[clearMemos]] frees
+    * everything eagerly (bench and test hook, and the release valve for
+    * long-lived sessions whose corpus dir CONTENTS changed — the memo
+    * key is the path, not the data). Honors [[CheckpointDirConf]] for
+    * executor-loss-tolerant materialization. Every access, hit or
+    * build, is logged to [[recordTouches]].
+    *
+    * Builds run OUTSIDE the map's mapping function because a build may
+    * consult another memoized frame (the component labels read the
+    * pair graph), whose stopped-session sweep iterates — and may
+    * mutate — this map; the benign same-key race just releases the
+    * losing build. */
   private val frameMemo =
     new java.util.concurrent.ConcurrentHashMap[String, MemoEntry]()
   private[graft] def memoizedFrame(spark: SparkSession, key: String)
-      (plan: => DataFrame): DataFrame = {
+      (plan: => DataFrame): DataFrame =
+    memoized(spark, key) { ckpt =>
+      withCheckpointDir(spark, ckpt) {
+        val (df, rdd) = materializeOwned(plan, ckpt.isDefined)
+        (df, () => retire(spark, rdd))
+      }
+    }
+
+  /** [[memoizedFrame]] for a build that materializes itself: `build`
+    * gets the configured checkpoint dir and returns the frame plus the
+    * hook that frees it. */
+  private def memoized(spark: SparkSession, key: String)
+      (build: Option[String] => (DataFrame, () => Unit)): DataFrame = {
     sweepStopped()
+    touch(key)
     val k = memoKey(spark, key)
     val hit = frameMemo.get(k)
     if (hit != null) hit.df
     else {
-      val ckpt = confCheckpointDir(spark)
-      val entry = withCheckpointDir(spark, ckpt) {
-        val (df, rdd) = materializeOwned(plan, ckpt.isDefined)
-        MemoEntry(df, spark, () => retire(spark, rdd))
-      }
+      val (df, release) = build(confCheckpointDir(spark))
+      val entry = MemoEntry(df, spark, release)
       val prev = frameMemo.putIfAbsent(k, entry)
       if (prev == null) entry.df
       else {
@@ -642,6 +642,30 @@ object Dedup {
         prev.df
       }
     }
+  }
+
+  /** Process-wide log of the memo keys and layout paths touched while
+    * [[recordTouches]] runs — how [[graft.Bench]]'s warm-up discovers
+    * which declared builds each query reads. Null (off) everywhere
+    * else. Process-wide, not thread-local: a build such as
+    * `SimSearch.buildAnnEncode` runs its chains on a pool. */
+  @volatile private var touchLog: java.util.Set[String] = null
+
+  /** Log `key` (a [[memoizedFrame]] key or an
+    * [[ScaleTechniques.ensureLayout]] path) if recording is on. */
+  private[graft] def touch(key: String): Unit = {
+    val log = touchLog
+    if (log != null) log.add(key)
+  }
+
+  /** Run `body` with touch recording on; returns every key touched from
+    * any thread meanwhile. */
+  private[graft] def recordTouches(body: => Unit): Set[String] = {
+    val log = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    touchLog = log
+    try body finally touchLog = null
+    import scala.jdk.CollectionConverters._
+    log.asScala.toSet
   }
 
   /** Unique id per live session (SparkSession.sessionUUID is private):
@@ -654,13 +678,14 @@ object Dedup {
     sessionIds.computeIfAbsent(spark, _ => java.util.UUID.randomUUID().toString) +
       "#" + dir
 
-  /** Free every memoized pair/components frame: unpersist the backing
-    * blocks, delete reliable-checkpoint files, empty both maps. Safe to
-    * call between unrelated pipeline runs in a long-lived session (the
-    * next consumer rebuilds), and what [[graft.Bench]] calls before each
-    * measured pass so the memo build cost is measured, not hidden. */
+  /** Free every memoized frame and retained result: unpersist the
+    * backing blocks, delete reliable-checkpoint files, empty both maps.
+    * Safe to call between unrelated pipeline runs in a long-lived
+    * session (the next consumer rebuilds), and what [[graft.Bench]]
+    * calls before each measured pass so the memo build cost is
+    * measured, not hidden. */
   def clearMemos(): Unit = {
-    Seq(pairsMemo, componentsMemo, frameMemo, retainedResults).foreach { m =>
+    Seq(frameMemo, retainedResults).foreach { m =>
       m.values.forEach { e =>
         // releasing against an already-stopped context is a no-op, not an error
         try e.release() catch { case scala.util.control.NonFatal(_) => () }
@@ -710,7 +735,7 @@ object Dedup {
     * cached access so multi-session JVMs (test suites, servers) cannot
     * accumulate pinned blocks for sessions that no longer exist. */
   private def sweepStopped(): Unit =
-    Seq(pairsMemo, componentsMemo, frameMemo, retainedResults).foreach { m =>
+    Seq(frameMemo, retainedResults).foreach { m =>
       val it = m.entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
@@ -1756,47 +1781,27 @@ object Dedup {
     }
   }
 
-  /** Near-dup CLUSTERS: [[componentsOf]] over the [[minhashLsh]] pair
-    * graph. One row per clustered document: (doc_id, component) where
-    * component is the cluster's minimum doc_id. The oracle is a DuckDB
-    * recursive CTE computing min-reachable-id over the same pair set, so
-    * the row set proves the iterative Spark loop reaches the true
-    * transitive closure — not just the pairs it happened to see first. */
-  /** Converged component labels over the memoized pair graph, memoized
-    * with the same key/lifetime/checkpoint discipline as
-    * [[minhashPairsCached]] (sessionUUID keys, stopped-session sweep,
-    * [[clearMemos]], [[CheckpointDirConf]]): [[nearDupComponents]] and
+  /** Converged component labels over the memoized pair graph, an
+    * ordinary [[memoizedFrame]] key: [[nearDupComponents]] and
     * [[dedupedCorpusClustered]] both need them, and the CC loop
     * (driver-coordinated rounds) is the one subplan worth never running
     * twice. The labels frame is even smaller than the pair set (one row
     * per clustered doc), and the memo owns the final round's storage via
     * the [[ComponentsHandle]] — the deliberate, bounded version of what
     * would otherwise be a per-call leak. */
-  private val componentsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, MemoEntry]()
-  private[graft] def componentsCached(spark: SparkSession, dir: String): DataFrame = {
-    sweepStopped()
-    val key = memoKey(spark, dir)
-    val hit = componentsMemo.get(key)
-    if (hit != null) hit.df
-    else {
-      // built OUTSIDE any computeIfAbsent: the build consults
-      // minhashPairsCached, whose stopped-session sweep iterates (and may
-      // mutate) THIS map — forbidden inside a CHM mapping function. The
-      // benign same-key race just releases the losing build.
+  private[graft] def componentsCached(spark: SparkSession, dir: String): DataFrame =
+    memoized(spark, s"components#$dir") { ckpt =>
       val handle = componentsOfManaged(
-        minhashPairsCached(spark, dir).select("doc_a", "doc_b"),
-        confCheckpointDir(spark))
-      val entry = MemoEntry(handle.labels, spark, handle.release)
-      val prev = componentsMemo.putIfAbsent(key, entry)
-      if (prev == null) entry.df
-      else {
-        try entry.release() catch { case scala.util.control.NonFatal(_) => () }
-        prev.df
-      }
+        minhashPairsCached(spark, dir).select("doc_a", "doc_b"), ckpt)
+      (handle.labels, handle.release)
     }
-  }
 
+  /** Near-dup CLUSTERS: [[componentsOf]] over the [[minhashLsh]] pair
+    * graph. One row per clustered document: (doc_id, component) where
+    * component is the cluster's minimum doc_id. The oracle is a DuckDB
+    * recursive CTE computing min-reachable-id over the same pair set, so
+    * the row set proves the iterative Spark loop reaches the true
+    * transitive closure — not just the pairs it happened to see first. */
   def nearDupComponents(spark: SparkSession, dir: String): DataFrame =
     componentsCached(spark, dir)
       .select(col("id").as("doc_id"), col("component"))

@@ -293,10 +293,10 @@ object Graph {
       }
       var rounds = 0
       var delta = Long.MaxValue
-      // FOUR-ROUND UNROLL (r14, deepened from r13's two — the loop's
-      // wall at tested SFs is driver latency per materialized job, not
-      // executor work): each job computes up to [[PrUnrollDepth]]
-      // damped steps and ONE aggregate returns every step's L1 delta.
+      // MULTI-ROUND UNROLL (the loop's wall at tested SFs is driver
+      // latency per materialized job, not executor work): each job
+      // computes up to [[PrUnrollDepth]] damped steps and ONE
+      // aggregate returns every step's L1 delta.
       // Stop semantics are replicated exactly: the state and round
       // count land at the FIRST step whose delta drops under the
       // tolerance (later steps' columns are discarded — their compute

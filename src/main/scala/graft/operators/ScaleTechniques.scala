@@ -280,8 +280,10 @@ object ScaleTechniques {
     * `_SUCCESS`-guarded, staged-eviction of partial writes, build under
     * a pid-suffixed temp dir, atomic-rename publish, registered for
     * the [[graft.operators.Dedup.clearMemos]] sweep. Shared by the DPP
-    * fact layout and the z-order block layout. */
+    * fact layout and the z-order block layout. Every call, load or
+    * build, is logged to [[graft.operators.Dedup.recordTouches]]. */
   private[graft] def ensureLayout(path: String)(write: String => Unit): String = {
+    Dedup.touch(path)
     layoutLocks.computeIfAbsent(path, _ => new Object).synchronized {
       if (!new java.io.File(path, "_SUCCESS").exists()) {
         // no _SUCCESS ⇒ absent or a crashed write: clear and republish.

@@ -502,8 +502,9 @@ object SimSearch {
     * at most [[KmTrainPerCent]]·K vectors (FAISS's
     * `cp.max_points_per_centroid = 256` default). Lloyd's cost is
     * iterations × O(trainset·K·dims); with the cap it stops growing
-    * with the corpus — the r10 VERDICT directive on `build:ann_index`,
-    * whose coarse-quantizer and PQ training legs were the only
+    * with the corpus — the r10 VERDICT directive on the ANN index
+    * build, whose coarse-quantizer and PQ training legs (now
+    * `build:ann_train`) were the only
     * corpus-sized TRAIN loops left (encode/serve passes are
     * corpus-sized by nature). Statistical footing: k-means centroids
     * are cluster means, and means estimated from 256 points per
@@ -754,16 +755,13 @@ object SimSearch {
         // the member-coordinate stream (cnt 0, carrying c_prev), so the
         // round's single exchange — the recenter gather — also carries
         // the delta's join-back, and the r13 broadcast(cur) build job
-        // per round is gone. The wide assign carries each member's
-        // coordinate array along, so the member coordinates come from a
-        // row-local posexplode — the r13 tvecs re-join per round is
-        // gone too. Semantics are exact: sum(vs) ignores the self rows'
-        // null vs, sum(cnt) counts members only (≡ the old count(1)
-        // over the inner join), c_prev is max over the single non-null
-        // state row, and the n_members > 0 filter is the old inner
-        // join's emptied-cluster exit (assignments only target cents
-        // present in `cur`, so no contribution group lacks a state
-        // row). All BIGINT fixed-point.
+        // per round is gone. Semantics are exact: sum(vs) ignores the
+        // self rows' null vs, sum(cnt) counts members only (≡ the old
+        // count(1) over the inner join), c_prev is max over the single
+        // non-null state row, and the n_members > 0 filter is the old
+        // inner join's emptied-cluster exit (assignments only target
+        // cents present in `cur`, so no contribution group lacks a
+        // state row). All BIGINT fixed-point.
         val members = tvecs.join(assignTo(cur), "vec_id")
           .select(col("cent_id"), col("d"), col("vs"), lit(1L).as("cnt"),
             lit(null).cast("long").as("c_prev"))
@@ -814,8 +812,9 @@ object SimSearch {
   // OPQ-rotated corpus with its own codebook and codes —
   // materialize once per (session, dir) through Dedup's memo machinery
   // (clearMemos-released, checkpoint-dir aware, build cost charged to
-  // the bench's `build:ann_index` row) and every consumer reads the
-  // cached blocks. The `Of`-variants stay fully self-contained (tests
+  // the bench's `build:ann_train` row for the trained centroids and
+  // codebook, `build:ann_encode` for the rest) and every consumer reads
+  // the cached blocks. The `Of`-variants stay fully self-contained (tests
   // and the Scale harness call them on constructed/replicated frames).
   // Content is deterministic for a fixed dir, so the cache can never go
   // stale — the same contract as the minhash pair memo.
@@ -1512,9 +1511,9 @@ object SimSearch {
   //
   // A production vector store ingests continuously; rebuilding the
   // index per batch is the corpus-sized cost the delta-merge removes
-  // (the `q_text_bm25_index_merge` discipline applied to
-  // `build:ann_index`). The FROZEN artifacts are trained ONCE on the
-  // snapshot — the coarse quantizer cells and the PQ codebook — and an
+  // (the `q_text_bm25_index_merge` discipline applied to the ANN
+  // index, `build:ann_encode`). The FROZEN artifacts are trained ONCE
+  // on the snapshot — the coarse quantizer cells and the PQ codebook — and an
   // arriving batch folds in at O(batch): assign each new vector to the
   // frozen quantizer, encode it with the frozen codebooks, append the
   // (code, cell) rows to the inverted lists. Because assignment and
@@ -1538,7 +1537,7 @@ object SimSearch {
 
   // the persisted snapshot-index frames, memoized per (session, dir)
   // through the same lifecycle as the other ANN artifacts (swept by
-  // clearMemos, build cost charged to the bench's `build:ann_index`
+  // clearMemos, build cost charged to the bench's `build:ann_encode`
   // row); `snap` is the even-id half — the standing snapshot/batch
   // split of the incremental family
   private def mergeSnap(e: DataFrame): DataFrame =
@@ -1610,7 +1609,7 @@ object SimSearch {
     * (codebook trained on the even half only), so the hash match pins
     * the add path's assignment, encoding and list maintenance exactly.
     * Cost shape: the snapshot index is a persisted artifact (memoized,
-    * `build:ann_index`); the query pays batch-encode + routed serve —
+    * `build:ann_encode`); the query pays batch-encode + routed serve —
     * O(batch + probed lists), never O(corpus). SCALE.md §annmerge
     * measures the merged serve flat while the rebuild arm grows with
     * the snapshot. */
@@ -1972,8 +1971,8 @@ object SimSearch {
     * K lands on [[KmK]] (small corpora) the persisted serving index's
     * quantizer is reused verbatim; otherwise the derived assignment is
     * its own memoized index artifact ([[semAssignment]], built with
-    * the rest of the index in `build:ann_index`). Assignment is the
-    * trained quantizer: one broadcast-join pass over the corpus. The
+    * the rest of the encode legs in `build:ann_encode`). Assignment is
+    * the trained quantizer: one broadcast-join pass over the corpus. The
     * pair join is keyed on cent_id (co-partitioned, no cross product),
     * and the witness window partitions by the dropped vector —
     * `WindowGroupLimit` bounds it before the shuffle. */
@@ -2627,7 +2626,7 @@ object SimSearch {
 
   /** The registered pruned arm's quantizer geometry, memoized per
     * (session, corpus snapshot) like every other ANN index artifact
-    * (built once, charged to Bench's `build:ann_index` row). Cells are
+    * (built once, charged to Bench's `build:ann_encode` row). Cells are
     * [[semAssignment]]'s — K ∝ N at ~[[SemCellTarget]] members/cell, so
     * the prune gets FINER as the corpus grows, which is what keeps the
     * per-round active set bounded at scale. */

@@ -1182,8 +1182,17 @@ object TextAnalysis {
       .format("parquet")
       .saveAsTable(table)
 
-  def readSpanGramIndex(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
+  /** Fails loudly on a snapshot whose `g` is not the 16-byte binary
+    * digest: a pre-r14 snapshot keyed `g` by a hex string, which joins
+    * against the binary probe without error and screens nothing. */
+  def readSpanGramIndex(spark: SparkSession, table: String): DataFrame = {
+    val idx = spark.table(table)
+    val g = idx.schema.find(_.name == "g").map(_.dataType)
+    require(g.contains(org.apache.spark.sql.types.BinaryType),
+      s"span-gram index table $table: g is ${g.fold("missing")(_.simpleString)}, " +
+        "expected binary; rewrite it with writeSpanGramIndex")
+    idx
+  }
 
   /** INCREMENTAL span-dedup SCREEN — [[dupSpanApply]]'s arriving-batch
     * form: rebuild each NEW document with every span already present

@@ -88,4 +88,30 @@ class SpanScreenSpec extends AnyFunSuite {
         .digest("tail end".getBytes("UTF-8"))
         .map("%02x".format(_)).mkString)
   }
+
+  test("a writeSpanGramIndex snapshot round-trips through readSpanGramIndex") {
+    val docs = Seq(
+      (1L, "one two three four five six seven eight nine ten eleven"),
+      (2L, "zero one two three four five six seven eight nine")
+    ).toDF("doc_id", "text")
+    val table = "span_gram_idx_roundtrip"
+    TextAnalysis.writeSpanGramIndex(docs, table, buckets = 2)
+    try {
+      def rows(df: org.apache.spark.sql.DataFrame) = df.select("g", "df_docs")
+        .collect().map(r => (r.getAs[Array[Byte]](0).toSeq, r.getLong(1))).toSet
+      val read = rows(TextAnalysis.readSpanGramIndex(spark, table))
+      assert(read.nonEmpty && read === rows(TextAnalysis.spanGramIndexOf(docs)))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("a snapshot keyed by a hex-string g fails loudly on read") {
+    val table = "span_gram_idx_stale"
+    Seq(("0123456789abcdef0123456789abcdef", 2L)).toDF("g", "df_docs")
+      .write.mode("overwrite").format("parquet").saveAsTable(table)
+    try {
+      val e = intercept[IllegalArgumentException](
+        TextAnalysis.readSpanGramIndex(spark, table))
+      assert(e.getMessage.contains(table))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
 }
