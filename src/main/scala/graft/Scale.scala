@@ -463,28 +463,28 @@ object Scale {
       val docs = replicatedDocs(spark, baseDir, k)
       val t0p = System.nanoTime()
       val pairsDf = Dedup.minhashPairsOf(docs).select("doc_a", "doc_b")
-      val (pairs, pairsRdd) = Dedup.materializeOwned(pairsDf, reliable = false)
-      val nPairs = pairs.count()
-      val tPairs = (System.nanoTime() - t0p) / 1e9
-      val t0s = System.nanoTime()
-      val oldLabDf = Dedup.componentsOf(
-        pairs.filter(col("doc_a") % 2 === 0 && col("doc_b") % 2 === 0))
-      val (oldLab, oldLabRdd) = Dedup.materializeOwned(oldLabDf, reliable = false)
-      val nState = oldLab.count()
-      val tState = (System.nanoTime() - t0s) / 1e9
-      val deltaPairs = pairs.filter(
-        (col("doc_a") % 2 === 1 && col("doc_a") < ReplicaStride) ||
-          (col("doc_b") % 2 === 1 && col("doc_b") < ReplicaStride))
-      val t0m = System.nanoTime()
-      val upd = Dedup.ccIncrementalFrom(oldLab, deltaPairs).collect()
-      val tMerge = (System.nanoTime() - t0m) / 1e9
-      val t0f = System.nanoTime()
-      val nFull = Dedup.componentsOf(pairs).count()
-      val tFull = (System.nanoTime() - t0f) / 1e9
-      Dedup.retire(spark, pairsRdd)
-      Dedup.retire(spark, oldLabRdd)
-      s"| ${k}x | $nPairs | ${f"$tPairs%.1f"}s | $nState | ${f"$tState%.1f"}s | " +
-        s"${upd.length} | ${f"$tMerge%.1f"}s | $nFull | ${f"$tFull%.1f"}s |"
+      Dedup.withCuts(spark, None) { cuts =>
+        val pairs = cuts.cut(pairsDf)
+        val nPairs = pairs.count()
+        val tPairs = (System.nanoTime() - t0p) / 1e9
+        val t0s = System.nanoTime()
+        val oldLabDf = Dedup.componentsOf(
+          pairs.filter(col("doc_a") % 2 === 0 && col("doc_b") % 2 === 0))
+        val oldLab = cuts.cut(oldLabDf)
+        val nState = oldLab.count()
+        val tState = (System.nanoTime() - t0s) / 1e9
+        val deltaPairs = pairs.filter(
+          (col("doc_a") % 2 === 1 && col("doc_a") < ReplicaStride) ||
+            (col("doc_b") % 2 === 1 && col("doc_b") < ReplicaStride))
+        val t0m = System.nanoTime()
+        val upd = Dedup.ccIncrementalFrom(oldLab, deltaPairs).collect()
+        val tMerge = (System.nanoTime() - t0m) / 1e9
+        val t0f = System.nanoTime()
+        val nFull = Dedup.componentsOf(pairs).count()
+        val tFull = (System.nanoTime() - t0f) / 1e9
+        s"| ${k}x | $nPairs | ${f"$tPairs%.1f"}s | $nState | ${f"$tState%.1f"}s | " +
+          s"${upd.length} | ${f"$tMerge%.1f"}s | $nFull | ${f"$tFull%.1f"}s |"
+      }
     }
     if (sections("ccinc")) {
       println()
@@ -513,21 +513,22 @@ object Scale {
         Multimodal.audioFingerprint(
           Multimodal.audioSliceOfIds(spine, emitBase = true, emitEdits = false))
           .toDF().withColumnRenamed("fp", "dhash"))
-      val (idx, idxRdd) = Dedup.materializeOwned(idxDf, reliable = false)
-      val nIdx = idx.count()
-      val tIdx = (System.nanoTime() - t0i) / 1e9
-      val batch = Multimodal.audioSliceOfIds(
-        graft.sources.Tables.fanOut(
-          graft.sources.Tables.documents(spark, baseDir).select(col("doc_id")))
-          .as[Long],
-        emitBase = false, emitEdits = true)
-      val t0s = System.nanoTime()
-      val nScreen = Multimodal.imageNearDupScreen(
-        Multimodal.audioFingerprint(batch).toDF()
-          .withColumnRenamed("fp", "dhash"), idx).count()
-      val tScreen = (System.nanoTime() - t0s) / 1e9
-      Dedup.retire(spark, idxRdd)
-      s"| ${k}x | $nIdx | ${f"$tIdx%.1f"}s | $nScreen | ${f"$tScreen%.1f"}s |"
+      Dedup.withCuts(spark, None) { cuts =>
+        val idx = cuts.cut(idxDf)
+        val nIdx = idx.count()
+        val tIdx = (System.nanoTime() - t0i) / 1e9
+        val batch = Multimodal.audioSliceOfIds(
+          graft.sources.Tables.fanOut(
+            graft.sources.Tables.documents(spark, baseDir).select(col("doc_id")))
+            .as[Long],
+          emitBase = false, emitEdits = true)
+        val t0s = System.nanoTime()
+        val nScreen = Multimodal.imageNearDupScreen(
+          Multimodal.audioFingerprint(batch).toDF()
+            .withColumnRenamed("fp", "dhash"), idx).count()
+        val tScreen = (System.nanoTime() - t0s) / 1e9
+        s"| ${k}x | $nIdx | ${f"$tIdx%.1f"}s | $nScreen | ${f"$tScreen%.1f"}s |"
+      }
     }
     if (sections("media")) {
       println()
@@ -552,21 +553,22 @@ object Scale {
         Multimodal.videoFingerprint(
           Multimodal.videoSliceOfIds(spine, emitBase = true, emitEdits = false))
           .toDF().withColumnRenamed("fp", "dhash"))
-      val (idx, idxRdd) = Dedup.materializeOwned(idxDf, reliable = false)
-      val nIdx = idx.count()
-      val tIdx = (System.nanoTime() - t0i) / 1e9
-      val batch = Multimodal.videoSliceOfIds(
-        graft.sources.Tables.fanOut(
-          graft.sources.Tables.documents(spark, baseDir).select(col("doc_id")))
-          .as[Long],
-        emitBase = false, emitEdits = true)
-      val t0s = System.nanoTime()
-      val nScreen = Multimodal.imageNearDupScreen(
-        Multimodal.videoFingerprint(batch).toDF()
-          .withColumnRenamed("fp", "dhash"), idx).count()
-      val tScreen = (System.nanoTime() - t0s) / 1e9
-      Dedup.retire(spark, idxRdd)
-      s"| ${k}x | $nIdx | ${f"$tIdx%.1f"}s | $nScreen | ${f"$tScreen%.1f"}s |"
+      Dedup.withCuts(spark, None) { cuts =>
+        val idx = cuts.cut(idxDf)
+        val nIdx = idx.count()
+        val tIdx = (System.nanoTime() - t0i) / 1e9
+        val batch = Multimodal.videoSliceOfIds(
+          graft.sources.Tables.fanOut(
+            graft.sources.Tables.documents(spark, baseDir).select(col("doc_id")))
+            .as[Long],
+          emitBase = false, emitEdits = true)
+        val t0s = System.nanoTime()
+        val nScreen = Multimodal.imageNearDupScreen(
+          Multimodal.videoFingerprint(batch).toDF()
+            .withColumnRenamed("fp", "dhash"), idx).count()
+        val tScreen = (System.nanoTime() - t0s) / 1e9
+        s"| ${k}x | $nIdx | ${f"$tIdx%.1f"}s | $nScreen | ${f"$tScreen%.1f"}s |"
+      }
     }
     if (sections("videomedia")) {
       println()
@@ -851,17 +853,17 @@ object Scale {
     val rowsDiff = factors.filter(_ => sections("snapdiff")).map { k =>
       System.err.println(s"[scale] factor $k (snapshot diff) ...")
       import graft.operators.CorpusMerge
-      val (snap, snapRdd) = Dedup.materializeOwned(
-        replicatedDocs(spark, baseDir, k)
-          .select(col("doc_id"), col("text"), col("lang"), col("source")),
-        reliable = false)
-      val n = snap.count()
-      val merged = CorpusMerge.mergeUpsert(snap,
-        CorpusMerge.changeBatchOf(spark, snap), "doc_id",
-        Seq("text", "lang", "source"))
-      val (nd, td) = timedCount(CorpusMerge.snapshotDiffOf(snap, merged))
-      Dedup.retire(spark, snapRdd)
-      s"| ${k}x | $n | $nd | ${f"$td%.1f"}s |"
+      Dedup.withCuts(spark, None) { cuts =>
+        val snap = cuts.cut(
+          replicatedDocs(spark, baseDir, k)
+            .select(col("doc_id"), col("text"), col("lang"), col("source")))
+        val n = snap.count()
+        val merged = CorpusMerge.mergeUpsert(snap,
+          CorpusMerge.changeBatchOf(spark, snap), "doc_id",
+          Seq("text", "lang", "source"))
+        val (nd, td) = timedCount(CorpusMerge.snapshotDiffOf(snap, merged))
+        s"| ${k}x | $n | $nd | ${f"$td%.1f"}s |"
+      }
     }
     if (sections("snapdiff")) {
       println()
@@ -953,18 +955,17 @@ object Scale {
     val rowsCdcInc = factors.filter(_ => sections("cdcinc")).map { k =>
       System.err.println(s"[scale] factor $k (cdc incremental screen) ...")
       val t0i = System.nanoTime()
-      val (idx, idxRdd) = Dedup.materializeOwned(
-        Dedup.cdcChunkIndexOf(replicatedDocs(spark, baseDir, k)),
-        reliable = false)
-      val nIdx = idx.count()
-      val tIdx = (System.nanoTime() - t0i) / 1e9
-      val batch = graft.sources.Tables.fanOut(
-          graft.sources.Tables.documents(spark, baseDir))
-        .select((col("doc_id") + Dedup.CdcRedeliverShift).as("doc_id"),
-          concat(lit("redelivered copy "), col("text")).as("text"))
-      val (n, t) = timedCount(Dedup.cdcScreenOf(batch, idx))
-      Dedup.retire(spark, idxRdd)
-      s"| ${k}x | $nIdx | ${f"$tIdx%.1f"}s | $n | ${f"$t%.1f"}s |"
+      Dedup.withCuts(spark, None) { cuts =>
+        val idx = cuts.cut(Dedup.cdcChunkIndexOf(replicatedDocs(spark, baseDir, k)))
+        val nIdx = idx.count()
+        val tIdx = (System.nanoTime() - t0i) / 1e9
+        val batch = graft.sources.Tables.fanOut(
+            graft.sources.Tables.documents(spark, baseDir))
+          .select((col("doc_id") + Dedup.CdcRedeliverShift).as("doc_id"),
+            concat(lit("redelivered copy "), col("text")).as("text"))
+        val (n, t) = timedCount(Dedup.cdcScreenOf(batch, idx))
+        s"| ${k}x | $nIdx | ${f"$tIdx%.1f"}s | $n | ${f"$t%.1f"}s |"
+      }
     }
     if (sections("cdcinc")) {
       println()
@@ -989,30 +990,31 @@ object Scale {
       // pruned sequential at the same K (r10): identical sequence,
       // driver-served argmax, triangle-bound update, matEvery=16
       val kq = SimSearch.semDerivedK(e.count())
-      val (assign, assignRdd) = Dedup.materializeOwned(
-        SimSearch.kmeansAssignment(e, kq, SimSearch.KmIters)
-          .select(col("vec_id"), col("cent_id").as("cell")), reliable = false)
-      val (geo, geoRdd) = Dedup.materializeOwned(
-        SimSearch.cellGeometryOf(e, assign), reliable = false)
-      val tel = scala.collection.mutable.ArrayBuffer
-        .empty[SimSearch.KcenterRoundPrune]
-      val t0p = System.nanoTime()
-      val selP = SimSearch.kcenterSelectPrunedOf(e, bigK, assign, geo,
-        telemetry = Some(tel)).collect()
-      val tP = (System.nanoTime() - t0p) / 1e9
-      val sameP = selP.map(_.toString).toSeq == seq.map(_.toString).toSeq
-      val rowFrac = 100.0 * tel.map(_.rowsSkipped).sum /
-        math.max(1L, tel.map(r => r.rowsSkipped + r.rowsActive).sum)
-      Dedup.retire(spark, assignRdd)
-      Dedup.retire(spark, geoRdd)
-      val t = 16
-      val passes = math.ceil((bigK - 1).toDouble / t).toInt
-      val t0b = System.nanoTime()
-      val selB = SimSearch.kcenterSelectBatchOf(e, t, passes).collect()
-      val tB = (System.nanoTime() - t0b) / 1e9
-      s"| $bigK | ${seq.length} | ${bigK - 1} | ${f"$tSeq%.1f"}s | " +
-        s"${f"$tP%.1f"}s | $sameP | ${f"$rowFrac%.0f"}% | " +
-        s"${selB.length} | $passes | ${f"$tB%.1f"}s |"
+      Dedup.withCuts(spark, None) { cuts =>
+        val assign = cuts.cut(
+          SimSearch.kmeansAssignment(e, kq, SimSearch.KmIters)
+            .select(col("vec_id"), col("cent_id").as("cell")))
+        val geo = cuts.cut(SimSearch.cellGeometryOf(e, assign))
+        val tel = scala.collection.mutable.ArrayBuffer
+          .empty[SimSearch.KcenterRoundPrune]
+        val t0p = System.nanoTime()
+        val selP = SimSearch.kcenterSelectPrunedOf(e, bigK, assign, geo,
+          telemetry = Some(tel)).collect()
+        val tP = (System.nanoTime() - t0p) / 1e9
+        val sameP = selP.map(_.toString).toSeq == seq.map(_.toString).toSeq
+        val rowFrac = 100.0 * tel.map(_.rowsSkipped).sum /
+          math.max(1L, tel.map(r => r.rowsSkipped + r.rowsActive).sum)
+        cuts.retire(assign)
+        cuts.retire(geo)
+        val t = 16
+        val passes = math.ceil((bigK - 1).toDouble / t).toInt
+        val t0b = System.nanoTime()
+        val selB = SimSearch.kcenterSelectBatchOf(e, t, passes).collect()
+        val tB = (System.nanoTime() - t0b) / 1e9
+        s"| $bigK | ${seq.length} | ${bigK - 1} | ${f"$tSeq%.1f"}s | " +
+          s"${f"$tP%.1f"}s | $sameP | ${f"$rowFrac%.0f"}% | " +
+          s"${selB.length} | $passes | ${f"$tB%.1f"}s |"
+      }
     }
     if (sections("kcenterprod")) {
       println()
@@ -1326,30 +1328,29 @@ object Scale {
       val n = e.count()
       val tb0 = System.nanoTime()
       val kq = SimSearch.semDerivedK(n)
-      val (assign, assignRdd) = Dedup.materializeOwned(
-        SimSearch.kmeansAssignment(e, kq, SimSearch.KmIters)
-          .select(col("vec_id"), col("cent_id").as("cell")), reliable = false)
-      val (geo, geoRdd) = Dedup.materializeOwned(
-        SimSearch.cellGeometryOf(e, assign), reliable = false)
-      val tBuild = (System.nanoTime() - tb0) / 1e9
-      val t0 = System.nanoTime()
-      val exact = SimSearch.kcenterSelectOf(e, SimSearch.KCenterK).collect()
-      val tExact = (System.nanoTime() - t0) / 1e9
-      val tel = scala.collection.mutable.ArrayBuffer
-        .empty[SimSearch.KcenterRoundPrune]
-      val t1 = System.nanoTime()
-      val pruned = SimSearch.kcenterSelectPrunedOf(e, SimSearch.KCenterK,
-        assign, geo, telemetry = Some(tel)).collect()
-      val tPruned = (System.nanoTime() - t1) / 1e9
-      val same = exact.map(_.toString).toSeq == pruned.map(_.toString).toSeq
-      val cellFrac = 100.0 * tel.map(_.cellsSkipped.toLong).sum /
-        math.max(1L, tel.map(r => (r.cellsSkipped + r.cellsActive).toLong).sum)
-      val rowFrac = 100.0 * tel.map(_.rowsSkipped).sum /
-        math.max(1L, tel.map(r => r.rowsSkipped + r.rowsActive).sum)
-      Dedup.retire(spark, assignRdd)
-      Dedup.retire(spark, geoRdd)
-      f"| $tag | $n | $kq | $same | $tExact%.1fs | $tPruned%.1fs | " +
-        f"$cellFrac%.0f%% | $rowFrac%.0f%% | $tBuild%.1fs |"
+      Dedup.withCuts(spark, None) { cuts =>
+        val assign = cuts.cut(
+          SimSearch.kmeansAssignment(e, kq, SimSearch.KmIters)
+            .select(col("vec_id"), col("cent_id").as("cell")))
+        val geo = cuts.cut(SimSearch.cellGeometryOf(e, assign))
+        val tBuild = (System.nanoTime() - tb0) / 1e9
+        val t0 = System.nanoTime()
+        val exact = SimSearch.kcenterSelectOf(e, SimSearch.KCenterK).collect()
+        val tExact = (System.nanoTime() - t0) / 1e9
+        val tel = scala.collection.mutable.ArrayBuffer
+          .empty[SimSearch.KcenterRoundPrune]
+        val t1 = System.nanoTime()
+        val pruned = SimSearch.kcenterSelectPrunedOf(e, SimSearch.KCenterK,
+          assign, geo, telemetry = Some(tel)).collect()
+        val tPruned = (System.nanoTime() - t1) / 1e9
+        val same = exact.map(_.toString).toSeq == pruned.map(_.toString).toSeq
+        val cellFrac = 100.0 * tel.map(_.cellsSkipped.toLong).sum /
+          math.max(1L, tel.map(r => (r.cellsSkipped + r.cellsActive).toLong).sum)
+        val rowFrac = 100.0 * tel.map(_.rowsSkipped).sum /
+          math.max(1L, tel.map(r => r.rowsSkipped + r.rowsActive).sum)
+        f"| $tag | $n | $kq | $same | $tExact%.1fs | $tPruned%.1fs | " +
+          f"$cellFrac%.0f%% | $rowFrac%.0f%% | $tBuild%.1fs |"
+      }
     }
     val rowsKcPrune = factors.filter(_ => sections("kcprune")).map { k =>
       System.err.println(s"[scale] factor $k (kcprune) ...")
@@ -1438,15 +1439,16 @@ object Scale {
         else base.select((col("media_id") + lit(i * ReplicaStride)).as("media_id"),
           col("ok"), col("dhash"))
       }.reduce(_ unionByName _)
-      val (hashes, hashesRdd) = Dedup.materializeOwned(grown, reliable = false)
-      val nImgs = hashes.count()
-      val t0 = System.nanoTime()
-      val rows = Multimodal.phashGroupPairsOf(hashes)
-        .agg(count(lit(1)).as("rows"), sum(col("n_pairs")).as("id_pairs"))
-        .collect()(0)
-      val t = (System.nanoTime() - t0) / 1e9
-      Dedup.retire(spark, hashesRdd)
-      s"| ${k}x | $nImgs | ${rows.getLong(0)} | ${rows.getLong(1)} | ${f"$t%.1f"}s |"
+      Dedup.withCuts(spark, None) { cuts =>
+        val hashes = cuts.cut(grown)
+        val nImgs = hashes.count()
+        val t0 = System.nanoTime()
+        val rows = Multimodal.phashGroupPairsOf(hashes)
+          .agg(count(lit(1)).as("rows"), sum(col("n_pairs")).as("id_pairs"))
+          .collect()(0)
+        val t = (System.nanoTime() - t0) / 1e9
+        s"| ${k}x | $nImgs | ${rows.getLong(0)} | ${rows.getLong(1)} | ${f"$t%.1f"}s |"
+      }
     }
     if (sections("phashgrain")) {
       println()
@@ -1466,17 +1468,16 @@ object Scale {
       val e = replicatedEmbeddings(spark, baseDir, k)
       val nv = e.count()
       val t0 = System.nanoTime()
-      val (cs, csRdd) = Dedup.materializeOwned(
-        SimSearch.coresetTailOf(SimSearch.coresetScoredOf(e)),
-        reliable = false)
-      val nCs = cs.count()
-      val t = (System.nanoTime() - t0) / 1e9
-      // the training audit: 32-row Lloyd + ONE corpus assignment pass
-      val t1 = System.nanoTime()
-      val nTr = SimSearch.coresetTrainOf(e, cs).count()
-      val tTr = (System.nanoTime() - t1) / 1e9
-      Dedup.retire(spark, csRdd)
-      s"| ${k}x | $nv | $nCs | ${f"$t%.1f"}s | $nTr | ${f"$tTr%.1f"}s |"
+      Dedup.withCuts(spark, None) { cuts =>
+        val cs = cuts.cut(SimSearch.coresetTailOf(SimSearch.coresetScoredOf(e)))
+        val nCs = cs.count()
+        val t = (System.nanoTime() - t0) / 1e9
+        // the training audit: 32-row Lloyd + ONE corpus assignment pass
+        val t1 = System.nanoTime()
+        val nTr = SimSearch.coresetTrainOf(e, cs).count()
+        val tTr = (System.nanoTime() - t1) / 1e9
+        s"| ${k}x | $nv | $nCs | ${f"$t%.1f"}s | $nTr | ${f"$tTr%.1f"}s |"
+      }
     }
     if (sections("coreset")) {
       println()
@@ -1542,15 +1543,17 @@ object Scale {
       // exactly the §annmerge discipline)
       val (cents, book, snapAssign, snapCodes) =
         SimSearch.annMergeScaleFrames(snap)
-      val (ca, caRdd) = Dedup.materializeOwned(snapAssign, reliable = false)
-      val (cc, ccRdd) = Dedup.materializeOwned(snapCodes, reliable = false)
-      val t1 = System.nanoTime()
-      val nA = SimSearch.annForgetServeWith(
-        e, cents, book, ca, cc, batch, forgetV).count()
-      val tA = (System.nanoTime() - t1) / 1e9
-      Dedup.retire(spark, caRdd); Dedup.retire(spark, ccRdd)
-      s"| ${k}x | $nd | ${forgetD.count()} | $nB | ${f"$tB%.1f"}s | " +
-        s"$nA | ${f"$tA%.1f"}s |"
+      Dedup.withCuts(spark, None) { cuts =>
+        val ca = cuts.cut(snapAssign)
+        val cc = cuts.cut(snapCodes)
+        val t1 = System.nanoTime()
+        val nA = SimSearch.annForgetServeWith(
+          e, cents, book, ca, cc, batch, forgetV).count()
+        val tA = (System.nanoTime() - t1) / 1e9
+        cuts.retire(ca); cuts.retire(cc)
+        s"| ${k}x | $nd | ${forgetD.count()} | $nB | ${f"$tB%.1f"}s | " +
+          s"$nA | ${f"$tA%.1f"}s |"
+      }
     }
     if (sections("forget")) {
       println()
@@ -1645,24 +1648,24 @@ object Scale {
       val nBatch = batch.count()
       val (centsRaw, bookRaw) = SimSearch.encodeScaleArtifacts(base)
       // pin the frozen artifacts so neither timed call re-trains them
-      val (cents, centsRdd) = Dedup.materializeOwned(centsRaw, reliable = false)
-      val (book, bookRdd) = Dedup.materializeOwned(bookRaw, reliable = false)
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_annenc_scale").toString
-      val t0 = System.nanoTime()
-      SimSearch.ensureEncodedRoots(spark,
-        Seq(s"$scratch/base" -> base), cents, book)
-      val tBase = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      SimSearch.ensureEncodedRoots(spark,
-        Seq(s"$scratch/base" -> base, s"$scratch/batch" -> batch),
-        cents, book)
-      val tInc = (System.nanoTime() - t1) / 1e9
-      val encodedBatch = spark.read.parquet(s"$scratch/batch/ranked").count()
-      Dedup.retire(spark, centsRdd)
-      Dedup.retire(spark, bookRdd)
-      s"| ${k}x | $nBase | ${f"$tBase%.1f"}s | $nBatch | $encodedBatch | " +
-        s"${f"$tInc%.1f"}s |"
+      Dedup.withCuts(spark, None) { cuts =>
+        val cents = cuts.cut(centsRaw)
+        val book = cuts.cut(bookRaw)
+        val scratch = java.nio.file.Files
+          .createTempDirectory("graft_annenc_scale").toString
+        val t0 = System.nanoTime()
+        SimSearch.ensureEncodedRoots(spark,
+          Seq(s"$scratch/base" -> base), cents, book)
+        val tBase = (System.nanoTime() - t0) / 1e9
+        val t1 = System.nanoTime()
+        SimSearch.ensureEncodedRoots(spark,
+          Seq(s"$scratch/base" -> base, s"$scratch/batch" -> batch),
+          cents, book)
+        val tInc = (System.nanoTime() - t1) / 1e9
+        val encodedBatch = spark.read.parquet(s"$scratch/batch/ranked").count()
+        s"| ${k}x | $nBase | ${f"$tBase%.1f"}s | $nBatch | $encodedBatch | " +
+          s"${f"$tInc%.1f"}s |"
+      }
     }
     if (sections("annencinc")) {
       println()

@@ -5897,13 +5897,18 @@ object SparkEntry {
 
     // gap-fill/resample: the spine replays Spark's sequence(min..max
     // hour) with generate_series; ffill is the identical ignore-nulls
-    // running last_value; averages divide a DECIMAL-exact sum by the
-    // exact count (both round 4dp); hours cross as strings
+    // running last_value; averages are EventsOps.mean4 replayed — the
+    // integer 10⁻⁴-unit sum over the count, rounded half away from zero
+    // in integers, one DOUBLE division at the end; hours cross as strings
     "q_events_resample" ->
-      """WITH obs AS (SELECT date_trunc('hour', ts) AS hour, event_type,
+      """WITH agg AS (SELECT date_trunc('hour', ts) AS hour, event_type,
         |          count(*)::BIGINT AS n_obs,
-        |          round(sum(value::DECIMAL(18,4))::DOUBLE / count(*), 4) AS obs_avg
+        |          sum((value::DECIMAL(18,4) * 10000)::BIGINT)::BIGINT AS s4
         |        FROM events GROUP BY 1, 2),
+        |obs AS (SELECT hour, event_type, n_obs,
+        |          (CASE WHEN s4 < 0 THEN -1 ELSE 1 END *
+        |           ((2 * abs(s4) + n_obs) // (2 * n_obs)))::DOUBLE / 10000 AS obs_avg
+        |        FROM agg),
         |b AS (SELECT min(hour) AS lo, max(hour) AS hi FROM obs),
         |hours AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour
         |          FROM b),

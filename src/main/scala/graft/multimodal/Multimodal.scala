@@ -431,27 +431,23 @@ object Multimodal {
     // cost is the codec. Materialize the (media_id, ok, dhash) frame —
     // 64 bits per image, the persisted index a real rollout stores —
     // and retire it once the 1-row summary is computed.
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      val (hashes, hashesRdd) = Dedup.materializeOwned(
-        dHash(plantedMediaRecords(spark, dir)).toDF(), ckDir.isDefined)
+    Dedup.withCuts(spark) { cuts =>
+      val hashes = cuts.cut(dHash(plantedMediaRecords(spark, dir)).toDF())
       val pairs = imageNearDup(hashes)
       val planted = col("id_b") === col("id_a") + PlantShift
       val nImages = hashes.agg(
         count(lit(1)).as("n_images"),
         sum(when(col("ok"), 0L).otherwise(1L)).as("n_undecodable"),
         sum(when(col("media_id") >= PlantShift, 1L).otherwise(0L)).as("planted_expected"))
-      val (out, outRdd) = Dedup.materializeOwned(
+      val out = cuts.cut(
         pairs.agg(
             count(lit(1)).as("n_pairs"),
             sum(when(planted, 1L).otherwise(0L)).as("planted_found"),
             max(when(planted, col("hamming"))).cast("long").as("planted_max_hamming"))
           .crossJoin(broadcast(nImages))
           .select("n_images", "n_undecodable", "planted_expected",
-            "planted_found", "n_pairs", "planted_max_hamming"),
-        ckDir.isDefined)
-      Dedup.retire(spark, hashesRdd)
-      Dedup.retainResult(spark, "phashNearDup", outRdd, out)
+            "planted_found", "n_pairs", "planted_max_hamming"))
+      cuts.keep("phashNearDup", out)
     }
   }
 
@@ -483,17 +479,12 @@ object Multimodal {
     // verdict measured this arm re-paying the full catalog decode the
     // index already charges to `build:media_index` (9.7× at 10× data
     // vs the screens' ~2×)
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      val (hashes, hashesRdd) = Dedup.materializeOwned(
+    Dedup.withCuts(spark) { cuts =>
+      val hashes = cuts.cut(
         baseHashesFromIndex(phashCatalogIndexCached(spark, dir)).unionByName(
           dHash(plantedMediaSlice(spark, dir, emitBase = false,
-            emitEdits = true)).toDF()),
-        ckDir.isDefined)
-      val (out, outRdd) = Dedup.materializeOwned(
-        phashGroupPairsOf(hashes), ckDir.isDefined)
-      Dedup.retire(spark, hashesRdd)
-      Dedup.retainResult(spark, "phashPairs", outRdd, out)
+            emitEdits = true)).toDF()))
+      cuts.keep("phashPairs", cuts.cut(phashGroupPairsOf(hashes)))
     }
   }
 
@@ -621,21 +612,19 @@ object Multimodal {
     * discipline), so the gate pins both the decode→dHash drift and the
     * asymmetric probe plan cross-engine. */
   def phashScreenInc(spark: SparkSession, dir: String): DataFrame = {
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
+    Dedup.withCuts(spark) { cuts =>
       // decode ONLY the arriving batch (the edits half of the planted
       // catalog); the base catalog is served from the memoized index —
       // cost scales with the batch, not the catalog
-      val (out, outRdd) = Dedup.materializeOwned(
+      val out = cuts.cut(
         imageNearDupScreen(
           dHash(plantedMediaSlice(spark, dir, emitBase = false, emitEdits = true))
             .toDF(),
           phashCatalogIndexCached(spark, dir))
           .select(col("new_id"), col("dup_of"),
             col("hamming").cast("long").as("hamming"))
-          .orderBy("new_id", "dup_of"),
-        ckDir.isDefined)
-      Dedup.retainResult(spark, "phashScreenInc", outRdd, out)
+          .orderBy("new_id", "dup_of"))
+      cuts.keep("phashScreenInc", out)
     }
   }
 
@@ -646,11 +635,10 @@ object Multimodal {
     * edits-decode subtree once per join leg — a shape the production
     * query never runs). */
   private[graft] def phashPairsPlanOf(spark: SparkSession, dir: String): DataFrame = {
-    val (hashes, _) = graft.operators.Dedup.materializeOwned(
+    val hashes = Dedup.unownedCut(
       baseHashesFromIndex(phashCatalogIndexCached(spark, dir)).unionByName(
         dHash(plantedMediaSlice(spark, dir, emitBase = false,
-          emitEdits = true)).toDF()),
-      reliable = false)
+          emitEdits = true)).toDF()))
     phashGroupPairsOf(hashes)
   }
 
@@ -832,25 +820,21 @@ object Multimodal {
     * fixture, so the gate pins both the decode→fingerprint path (codec
     * or kernel drift breaks the hash match) and the pairing plan. */
   def audioFpPairs(spark: SparkSession, dir: String): DataFrame = {
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
+    Dedup.withCuts(spark) { cuts =>
       // base half from the memoized fingerprint index; only the
       // arriving re-masters are decoded (the [[phashPairs]] fix on the
       // audio modality)
-      val (fps, fpsRdd) = Dedup.materializeOwned(
+      val fps = cuts.cut(
         baseHashesFromIndex(audioCatalogIndexCached(spark, dir)).unionByName(
           audioFingerprint(
             plantedAudioSlice(spark, dir, emitBase = false, emitEdits = true))
-            .toDF().withColumnRenamed("fp", "dhash")),
-        ckDir.isDefined)
-      val (out, outRdd) = Dedup.materializeOwned(
+            .toDF().withColumnRenamed("fp", "dhash")))
+      val out = cuts.cut(
         imageNearDup(fps)
           .select(col("id_a"), col("id_b"),
             col("hamming").cast("long").as("hamming"))
-          .orderBy("id_a", "id_b"),
-        ckDir.isDefined)
-      Dedup.retire(spark, fpsRdd)
-      Dedup.retainResult(spark, "audioFpPairs", outRdd, out)
+          .orderBy("id_a", "id_b"))
+      cuts.keep("audioFpPairs", out)
     }
   }
 
@@ -866,11 +850,10 @@ object Multimodal {
     * suite-pinned). Oracle: the probe replayed in SQL over the
     * committed [[AudioFpFixturePath]] fixture. */
   def audioFpScreenInc(spark: SparkSession, dir: String): DataFrame = {
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
+    Dedup.withCuts(spark) { cuts =>
       // decode ONLY the arriving re-masters; the base catalog is served
       // from the memoized fingerprint index ([[audioCatalogIndexCached]])
-      val (out, outRdd) = Dedup.materializeOwned(
+      val out = cuts.cut(
         imageNearDupScreen(
           audioFingerprint(
             plantedAudioSlice(spark, dir, emitBase = false, emitEdits = true))
@@ -878,9 +861,8 @@ object Multimodal {
           audioCatalogIndexCached(spark, dir))
           .select(col("new_id"), col("dup_of"),
             col("hamming").cast("long").as("hamming"))
-          .orderBy("new_id", "dup_of"),
-        ckDir.isDefined)
-      Dedup.retainResult(spark, "audioFpScreenInc", outRdd, out)
+          .orderBy("new_id", "dup_of"))
+      cuts.keep("audioFpScreenInc", out)
     }
   }
 
@@ -1150,25 +1132,21 @@ object Multimodal {
     * fixture, so the gate pins both the demux→fingerprint path and the
     * pairing plan. */
   def videoFpPairs(spark: SparkSession, dir: String): DataFrame = {
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
+    Dedup.withCuts(spark) { cuts =>
       // base half from the memoized fingerprint index; only the
       // arriving re-edits are demuxed (the [[phashPairs]] fix on the
       // video modality)
-      val (fps, fpsRdd) = Dedup.materializeOwned(
+      val fps = cuts.cut(
         baseHashesFromIndex(videoCatalogIndexCached(spark, dir)).unionByName(
           videoFingerprint(
             plantedVideoSlice(spark, dir, emitBase = false, emitEdits = true))
-            .toDF().withColumnRenamed("fp", "dhash")),
-        ckDir.isDefined)
-      val (out, outRdd) = Dedup.materializeOwned(
+            .toDF().withColumnRenamed("fp", "dhash")))
+      val out = cuts.cut(
         imageNearDup(fps)
           .select(col("id_a"), col("id_b"),
             col("hamming").cast("long").as("hamming"))
-          .orderBy("id_a", "id_b"),
-        ckDir.isDefined)
-      Dedup.retire(spark, fpsRdd)
-      Dedup.retainResult(spark, "videoFpPairs", outRdd, out)
+          .orderBy("id_a", "id_b"))
+      cuts.keep("videoFpPairs", out)
     }
   }
 
@@ -1183,9 +1161,8 @@ object Multimodal {
     * suite-pinned). Oracle: the probe replayed in SQL over the
     * committed [[VideoFpFixturePath]] fixture. */
   def videoFpScreenInc(spark: SparkSession, dir: String): DataFrame = {
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      val (out, outRdd) = Dedup.materializeOwned(
+    Dedup.withCuts(spark) { cuts =>
+      val out = cuts.cut(
         imageNearDupScreen(
           videoFingerprint(
             plantedVideoSlice(spark, dir, emitBase = false, emitEdits = true))
@@ -1193,9 +1170,8 @@ object Multimodal {
           videoCatalogIndexCached(spark, dir))
           .select(col("new_id"), col("dup_of"),
             col("hamming").cast("long").as("hamming"))
-          .orderBy("new_id", "dup_of"),
-        ckDir.isDefined)
-      Dedup.retainResult(spark, "videoFpScreenInc", outRdd, out)
+          .orderBy("new_id", "dup_of"))
+      cuts.keep("videoFpScreenInc", out)
     }
   }
 

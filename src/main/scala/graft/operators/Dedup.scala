@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
@@ -328,15 +329,9 @@ object Dedup {
 
   /** [[lshBandSweep]] over an explicit `(doc_id, text)` frame. */
   def lshBandSweepOf(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val ckDir = confCheckpointDir(spark)
-    withCheckpointDir(spark, ckDir) {
-      val (sigs, sigsRdd, truth, truthRdd) = lshSweepInputs(docs, ckDir.isDefined)
-      val (out, outRdd) = materializeOwned(lshBandSweepFrom(sigs, truth),
-        ckDir.isDefined)
-      retire(spark, sigsRdd)
-      retire(spark, truthRdd)
-      retainResult(spark, "lshBandSweep", outRdd, out)
+    withCuts(docs.sparkSession) { cuts =>
+      val (sigs, truth) = lshSweepInputs(docs, cuts.cut)
+      cuts.keep("lshBandSweep", cuts.cut(lshBandSweepFrom(sigs, truth)))
     }
   }
 
@@ -344,28 +339,27 @@ object Dedup {
     * query returns the retained `ExistingRDD`). */
   private[graft] def lshBandSweepPlanOf(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.fanOut(Tables.documents(spark, dir))
-    val (sigs, _, truth, _) = lshSweepInputs(docs, reliable = false)
+    val (sigs, truth) = lshSweepInputs(docs, unownedCut)
     lshBandSweepFrom(sigs, truth)
   }
 
   /** Materialized signature frame + exact ≥0.5 truth pairs, the two
     * inputs every sweep configuration shares. */
-  private def lshSweepInputs(docs: DataFrame, reliable: Boolean) = {
+  private def lshSweepInputs(docs: DataFrame, cut: DataFrame => DataFrame) = {
     val posting = shinglesOf(docs).distinct()
-    val (sigs, sigsRdd) = materializeOwned(minhashSigFrame(posting), reliable)
+    val sigs = cut(minhashSigFrame(posting))
     val sizes = posting.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = posting.alias("x").join(posting.alias("y"),
         col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("inter"))
-    val (truth, truthRdd) = materializeOwned(
+    val truth = cut(
       inter
         .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
         .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
         .filter(col("inter") * 2 >= col("na") + col("nb") - col("inter"))
-        .select("doc_a", "doc_b"),
-      reliable)
-    (sigs, sigsRdd, truth, truthRdd)
+        .select("doc_a", "doc_b"))
+    (sigs, truth)
   }
 
   private def lshBandSweepFrom(sigs: DataFrame, truth: DataFrame): DataFrame = {
@@ -563,7 +557,7 @@ object Dedup {
     * materialization below survives executor loss. */
   val CheckpointDirConf = "spark.graft.checkpointDir"
 
-  private[graft] def confCheckpointDir(spark: SparkSession): Option[String] =
+  private def confCheckpointDir(spark: SparkSession): Option[String] =
     spark.conf.getOption(CheckpointDirConf).map(_.trim).filter(_.nonEmpty)
 
   /** One memoized frame plus everything needed to free it: the owning
@@ -615,25 +609,24 @@ object Dedup {
     new java.util.concurrent.ConcurrentHashMap[String, MemoEntry]()
   private[graft] def memoizedFrame(spark: SparkSession, key: String)
       (plan: => DataFrame): DataFrame =
-    memoized(spark, key) { ckpt =>
-      withCheckpointDir(spark, ckpt) {
-        val (df, rdd) = materializeOwned(plan, ckpt.isDefined)
-        (df, () => retire(spark, rdd))
+    memoized(spark, key) {
+      withCuts(spark) { cuts =>
+        val df = cuts.cut(plan)
+        (df, cuts.handOff(df))
       }
     }
 
   /** [[memoizedFrame]] for a build that materializes itself: `build`
-    * gets the configured checkpoint dir and returns the frame plus the
-    * hook that frees it. */
+    * returns the frame plus the hook that frees it. */
   private def memoized(spark: SparkSession, key: String)
-      (build: Option[String] => (DataFrame, () => Unit)): DataFrame = {
+      (build: => (DataFrame, () => Unit)): DataFrame = {
     sweepStopped()
     touch(key)
     val k = memoKey(spark, key)
     val hit = frameMemo.get(k)
     if (hit != null) hit.df
     else {
-      val (df, release) = build(confCheckpointDir(spark))
+      val (df, release) = build
       val entry = MemoEntry(df, spark, release)
       val prev = frameMemo.putIfAbsent(k, entry)
       if (prev == null) entry.df
@@ -711,8 +704,7 @@ object Dedup {
     * memo maps. */
   private val retainedResults =
     new java.util.concurrent.ConcurrentHashMap[String, MemoEntry]()
-  private[graft] def retainResult(spark: SparkSession, key: String,
-      rdd: org.apache.spark.rdd.RDD[_],
+  private def retainResult(spark: SparkSession, key: String, rdd: RDD[_],
       df: DataFrame): DataFrame = {
     sweepStopped()
     val prev = retainedResults.put(memoKey(spark, key),
@@ -750,93 +742,134 @@ object Dedup {
       }
     }
 
-  /** Materialize `df` as an RDD the CALLER owns (so its storage can be
-    * freed deterministically): localCheckpoint by default, or — when
-    * `reliable` — persist + reliable checkpoint (persist FIRST:
-    * checkpointing re-runs the lineage otherwise, computing everything
-    * twice). Requires the context's checkpoint dir to be set in reliable
-    * mode (see [[withCheckpointDir]]). */
-  private[graft] def materializeOwned(df: DataFrame, reliable: Boolean)
-      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    val (out, rdd) = materializeOwnedLazy(df, reliable)
-    rdd.count()
-    (out, rdd)
-  }
-
-  /** [[materializeOwned]] WITHOUT the materializing count: the
-    * checkpoint is marked but the caller's own FIRST ACTION on the
-    * returned frame is what computes and pins it. For loops whose next
-    * step is an aggregate over the new round anyway (the delta-stopped
-    * PageRank's convergence test), this folds materialization and the
-    * test into ONE job per round instead of two. The caller must run
-    * an action covering every partition before relying on the blocks. */
-  private[graft] def materializeOwnedLazy(df: DataFrame, reliable: Boolean)
-      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    val rdd = df.rdd
-    if (reliable) { rdd.persist(); rdd.checkpoint() }
-    else rdd.localCheckpoint()
-    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
-  }
-
-  /** [[materializeOwned]] that PRESERVES the frame's physical layout
-    * (outputPartitioning + outputOrdering) across the materialization
-    * cut. The `df.rdd` → `createDataFrame` route above erases both —
-    * the rebuilt frame is an opaque scan, so a join keyed how the frame
-    * was already partitioned still plans an exchange AND a sort per
-    * consumer. That is exactly the wrong shape for an iterative loop's
-    * STATIC side (PageRank's edge frame: pre-shuffled by `src` once,
-    * then joined on `src` every round); `Dataset.localCheckpoint`'s
-    * `LogicalRDD` carries the layout, and the bridge hands back the
-    * internal RDD so [[retire]] keeps the owned-storage discipline.
-    * Reliable mode persists the internal RDD before the materializing
-    * count so the reliable checkpoint writes from cache instead of
-    * recomputing the lineage (the same persist-first rule as above). */
-  /** r14 HONESTY NOTE: under AQE this Spark records
+  /** Run `body` in an OWNED-CUT SCOPE: every frame `body` cuts through
+    * the [[Cuts]] it is handed is an RDD this scope owns, and on exit —
+    * normal or by exception — the scope retires every cut that was not
+    * [[Cuts.keep kept]] or [[Cuts.handOff handed off]]. This is the one
+    * place the cut policy lives: where a cut is checkpointed, whether it
+    * is eager or lazy, and who frees it.
+    *
+    * Checkpoint dir: resolved once per scope — [[CheckpointDirConf]] by
+    * default; the two-argument form takes an explicit dir, or `None` for
+    * `localCheckpoint` whatever the conf says. With a dir, every cut
+    * persists FIRST and then checkpoints reliably (checkpointing re-runs
+    * the lineage otherwise, computing everything twice); the context
+    * checkpoint dir is set for the scope and its previous location
+    * restored after (see [[withCheckpointDir]]).
+    *
+    * Cut shapes ([[Cuts]]):
+    *  - `cut` materializes now (a count job); `cutLazy` only marks the
+    *    cut, and the caller's FIRST action covering every partition
+    *    computes and pins it — for loops whose next step is an aggregate
+    *    over the new round anyway (a convergence test), one job per
+    *    round instead of two;
+    *  - the plain forms round-trip through `df.rdd` → `createDataFrame`,
+    *    which erases the frame's physical layout; `cutKeyed` /
+    *    `cutKeyedLazy` go through `Dataset.localCheckpoint` (or
+    *    `checkpoint`), whose `LogicalRDD` carries the layout and the
+    *    original plan's statistics, for a loop's static side or keyed
+    *    round state.
+    *
+    * r14 HONESTY NOTE (keyed cuts): under AQE this Spark records
     * `UnknownPartitioning` on the checkpoint's `LogicalRDD` whether the
     * cut is eager or lazy (verified by round-plan dump, plans/r14), so
-    * the layout preservation this function's name promises does NOT
-    * reach the consumers — each loop job re-exchanges the static frame
-    * once (AQE ReuseExchange dedups the per-reference copies, so it is
-    * once per JOB, not once per reference). A declared-layout variant
-    * (explicit HashPartitioning stamped on the LogicalRDD) was built
-    * and measured in r14 and REJECTED: removing the exchange also
-    * removed its intra-job reuse point, and the static side's join
-    * recomputed per consumer (pagerank-conv exec 19.5→269 s). The
-    * keyed shape is kept for the non-AQE static-planning mode, where
-    * the preserved layout does apply. */
-  private[graft] def materializeOwnedKeyed(df: DataFrame, reliable: Boolean)
-      : (DataFrame, org.apache.spark.rdd.RDD[_]) = {
-    val (ds, rdd) = materializeOwnedKeyedLazy(df, reliable)
-    rdd.count()
-    (ds, rdd)
+    * the layout preservation the keyed cut promises does NOT reach the
+    * consumers — each loop job re-exchanges the static frame once (AQE
+    * ReuseExchange dedups the per-reference copies, so it is once per
+    * JOB, not once per reference). A declared-layout variant (explicit
+    * HashPartitioning stamped on the LogicalRDD) was built and measured
+    * in r14 and REJECTED: removing the exchange also removed its
+    * intra-job reuse point, and the static side's join recomputed per
+    * consumer (pagerank-conv exec 19.5→269 s). The keyed shape is kept
+    * for the non-AQE static-planning mode, where the preserved layout
+    * does apply.
+    *
+    * Releasing before exit: `retire` frees a cut now (a loop's
+    * superseded round — anything a LATER action in the body must not
+    * find pinned); `keep` hands it to the one-slot retained-result
+    * registry ([[retainResult]]) under `key`; `handOff` returns its
+    * release hook for a memo entry or a [[ComponentsHandle]]. Each
+    * accepts only a frame this scope cut and still owns. */
+  private[graft] def withCuts[T](spark: SparkSession)(body: Cuts => T): T =
+    withCuts(spark, confCheckpointDir(spark))(body)
+
+  /** [[withCuts]] with an explicit checkpoint dir (`None`: local). */
+  private[graft] def withCuts[T](spark: SparkSession, dir: Option[String])
+      (body: Cuts => T): T =
+    withCheckpointDir(spark, dir) {
+      val cuts = new Cuts(spark, dir.isDefined)
+      try body(cuts) finally cuts.retireAll()
+    }
+
+  /** The handle [[withCuts]] gives its body. Thread-safe: a body may cut
+    * from a pool. */
+  private[graft] final class Cuts private[Dedup] (spark: SparkSession,
+      reliable: Boolean) {
+    private val owned = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, RDD[_])]
+
+    def cut(df: DataFrame): DataFrame = own(eager(cutOf(df, reliable, keyed = false)))
+    def cutLazy(df: DataFrame): DataFrame = own(cutOf(df, reliable, keyed = false))
+    def cutKeyed(df: DataFrame): DataFrame = own(eager(cutOf(df, reliable, keyed = true)))
+    def cutKeyedLazy(df: DataFrame): DataFrame = own(cutOf(df, reliable, keyed = true))
+
+    def retire(cut: DataFrame): Unit = Dedup.retire(spark, disown(cut))
+    def keep(key: String, cut: DataFrame): DataFrame =
+      retainResult(spark, key, disown(cut), cut)
+    def handOff(cut: DataFrame): () => Unit = {
+      val rdd = disown(cut)
+      () => Dedup.retire(spark, rdd)
+    }
+
+    private def own(c: (DataFrame, RDD[_])): DataFrame =
+      synchronized { owned += c; c._1 }
+    private def disown(cut: DataFrame): RDD[_] = synchronized {
+      val i = owned.indexWhere(_._1 eq cut)
+      require(i >= 0, "not a cut this scope still owns (cut elsewhere, " +
+        "or already retired, kept or handed off)")
+      owned.remove(i)._2
+    }
+    private[Dedup] def retireAll(): Unit = synchronized {
+      owned.foreach { case (_, rdd) => Dedup.retire(spark, rdd) }
+      owned.clear()
+    }
   }
 
-  /** [[materializeOwnedKeyed]] WITHOUT the materializing count — the
-    * layout-preserving twin of [[materializeOwnedLazy]], for a LOOP'S
-    * ROUND STATE: the caller's next action (e.g. the convergence-test
-    * aggregate) materializes the blocks, so each round stays one job,
-    * AND the round frame keeps its hash partitioning across the cut.
-    * That second property is what removes the per-round re-exchanges:
-    * a round output already partitioned by the state key feeds the
-    * next round's scatter join and its own damp/update join without
-    * either planning an Exchange — only the gather's groupBy (the
-    * algorithm's shuffle) remains. The caller must run an action
-    * covering every partition before relying on the blocks. */
-  private[graft] def materializeOwnedKeyedLazy(df: DataFrame, reliable: Boolean)
-      : (DataFrame, org.apache.spark.rdd.RDD[_]) = {
-    val ds = if (reliable) df.checkpoint(eager = false)
-             else df.localCheckpoint(eager = false)
-    val rdd = org.apache.spark.sql.GraftSqlBridge.internalRddOf(ds)
-    if (reliable) rdd.persist()
-    (ds, rdd)
+  /** A local eager cut NO scope owns: its blocks stay pinned until the
+    * RDD is garbage-collected. Only for frames that must outlive any
+    * scope because what they return reads the cut lazily — the PLANS.md
+    * audit hooks (`*PlanOf`, whose dumped plan reads the cut) plus
+    * [[cdcChunkStatsOf]] and `EventsOps.resampleHourlyOf` (whose
+    * returned, still-unexecuted frame reads it); retiring the cut at
+    * scope exit would break the frame they return. */
+  private[graft] def unownedCut(df: DataFrame): DataFrame =
+    eager(cutOf(df, reliable = false, keyed = false))._1
+
+  private def eager(c: (DataFrame, RDD[_])): (DataFrame, RDD[_]) = {
+    c._2.count()
+    c
   }
+
+  /** A marked (not yet computed) cut of `df` and the RDD that backs it. */
+  private def cutOf(df: DataFrame, reliable: Boolean, keyed: Boolean)
+      : (DataFrame, RDD[_]) =
+    if (keyed) {
+      val ds = if (reliable) df.checkpoint(eager = false)
+               else df.localCheckpoint(eager = false)
+      val rdd = org.apache.spark.sql.GraftSqlBridge.internalRddOf(ds)
+      if (reliable) rdd.persist()
+      (ds, rdd)
+    } else {
+      val rdd = df.rdd
+      if (reliable) { rdd.persist(); rdd.checkpoint() }
+      else rdd.localCheckpoint()
+      (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
+    }
 
   /** Unpersist an owned RDD and delete its reliable-checkpoint files (and
     * the per-context UUID parent dir once its last file is gone) — the
-    * single retirement path for superseded CC rounds and released memos,
-    * so repeated clustering calls cannot accumulate checkpoint dirs. */
-  private[graft] def retire(spark: SparkSession,
-                     rdd: org.apache.spark.rdd.RDD[_]): Unit = {
+    * single retirement path for cuts, released memos and retained
+    * results, so repeated calls cannot accumulate checkpoint dirs. */
+  private def retire(spark: SparkSession, rdd: RDD[_]): Unit = {
     // unpersist guarded separately: on an already-stopped context it
     // throws, but the reliable-checkpoint FILES below must still be
     // deleted — surviving the context is exactly what they are for
@@ -862,8 +895,8 @@ object Dedup {
     * caller originally passed — keeping their checkpoints rooted where
     * they intended with no per-call nesting. Checkpoint FILES written
     * under our dir outlive the restore and are deleted by [[retire]]. */
-  private[graft] def withCheckpointDir[T](spark: SparkSession,
-                                   dir: Option[String])(body: => T): T =
+  private def withCheckpointDir[T](spark: SparkSession,
+                                  dir: Option[String])(body: => T): T =
     dir match {
       case None => body
       case Some(d) =>
@@ -1329,7 +1362,7 @@ object Dedup {
     // the chunk frame feeds two consumers (the df frame and the census
     // join) — materialized once so the corpus-shaped chunking pass runs
     // once, not per consumer
-    val (chunks, _) = materializeOwned(cdcChunksOf(docs), reliable = false)
+    val chunks = unownedCut(cdcChunksOf(docs))
     val dfs = chunks.groupBy("ch")
       .agg(countDistinct("doc_id").as("df"))
     chunks.join(dfs, Seq("ch"))
@@ -1378,14 +1411,9 @@ object Dedup {
     * and 8 window sorts, 18 s at sf0.1 → ~4 s with the pin). Result is
     * retained latest-wins like the other materialized-result queries. */
   private[graft] def winnowPairsOf(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val ckDir = confCheckpointDir(spark)
-    withCheckpointDir(spark, ckDir) {
-      def mat(df: DataFrame) = materializeOwned(df, ckDir.isDefined)
-      val (fps, fpsRdd) = mat(winnowFingerprintsOf(docs))
-      val (out, outRdd) = mat(winnowPairsFrom(fps))
-      retire(spark, fpsRdd)
-      retainResult(spark, s"winnowPairs#$WinnowK#$WinnowW", outRdd, out)
+    withCuts(docs.sparkSession) { cuts =>
+      val fps = cuts.cut(winnowFingerprintsOf(docs))
+      cuts.keep(s"winnowPairs#$WinnowK#$WinnowW", cuts.cut(winnowPairsFrom(fps)))
     }
   }
 
@@ -1535,7 +1563,7 @@ object Dedup {
     // class as a signature index. As a bonus the checkpointed RDD
     // carries EXACT size statistics, so every downstream join picks
     // its strategy from real sizes instead of post-aggregate guesses.
-    // Through [[materializeOwned]] + [[retainResult]], NOT a bare
+    // Through an owned cut kept as the retained result, NOT a bare
     // Dataset.localCheckpoint: the bare form hands back no handle to
     // free, so every construction (bench warmup + passes, one per
     // Scale factor) pinned a corpus-sized RDD in executor storage with
@@ -1545,16 +1573,13 @@ object Dedup {
     // frame. (Still eager by design: the registered query's cost IS
     // this build plus the joins, and the exact-size statistics the
     // checkpoint hands Catalyst are the point.)
-    val spark = docs.sparkSession
-    val ckDir = confCheckpointDir(spark)
-    val docsets = withCheckpointDir(spark, ckDir) {
-      val (df, rdd) = materializeOwned(kept
+    val docsets = withCuts(docs.sparkSession) { cuts =>
+      cuts.keep("prefixDocsets", cuts.cut(kept
         .groupBy("doc_id")
         .agg(sort_array(collect_list(
             when(col("df") >= 2, struct(col("df"), col("g"))))).as("toks"),
           sum(when(col("df") === 1, 1L).otherwise(0L)).as("c1"))
-        .withColumn("n", size(col("toks")) + col("c1")), ckDir.isDefined)
-      retainResult(spark, "prefixDocsets", rdd, df)
+        .withColumn("n", size(col("toks")) + col("c1"))))
     }
     // Prefix membership is decided on the FULL kept set (the theorem
     // needs the first p = n − ⌈tc·n⌉ + 1 tokens of the whole ordering,
@@ -1700,26 +1725,24 @@ object Dedup {
     * executor loss — the cluster-grade mode a 100 TB run should use.
     * Both modes converge to identical labels (suite-pinned). */
   private[graft] def componentsOfManaged(pairs: DataFrame,
-      checkpointDir: Option[String] = None): ComponentsHandle = {
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.sql.Row
-    val spark = pairs.sparkSession
-    withCheckpointDir(spark, checkpointDir) {
-    // checkpoint as an owned RDD[Row] via [[materializeOwned]]: truncates
-    // lineage like Dataset.localCheckpoint, but keeps the handle so each
-    // superseded round's blocks AND checkpoint files are retired as soon
-    // as the next round is materialized.
+      checkpointDir: Option[String] = None): ComponentsHandle =
+    withCuts(pairs.sparkSession, checkpointDir)(componentsIn(_, pairs))
+
+  private def componentsIn(cuts: Cuts, pairs: DataFrame): ComponentsHandle = {
+    // every round is an owned cut: truncates lineage like
+    // Dataset.localCheckpoint, but keeps the handle so each superseded
+    // round's blocks AND checkpoint files are retired as soon as the
+    // next round is materialized.
     // the edge frame is the loop's STATIC side and every round joins it
     // on `dst`: pre-shuffle + pre-sort it by that key ONCE and keep the
-    // layout across the materialization cut (materializeOwnedKeyed —
-    // the plain owned form erases partitioning, so each round
-    // re-exchanged and re-sorted the whole edge frame; the PageRank
-    // loop's r12 fix, applied to CC)
-    val (edges, edgesRdd) = materializeOwnedKeyed(pairs
+    // layout across the materialization cut (a keyed cut — the plain
+    // owned form erases partitioning, so each round re-exchanged and
+    // re-sorted the whole edge frame; the PageRank loop's r12 fix,
+    // applied to CC)
+    val edges = cuts.cutKeyed(pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .repartition(col("dst")).sortWithinPartitions("dst"),
-      checkpointDir.isDefined)
+      .repartition(col("dst")).sortWithinPartitions("dst"))
     // KEYED loop state (r13): every labels cut is rooted at an explicit
     // repartition(id) so static planning can keep the neighbor join
     // (labels renamed id→dst against the dst-keyed edges), the
@@ -1733,10 +1756,11 @@ object Dedup {
     // label frames, where two saved V-row exchanges per round dominate
     // the one paid. Labels are integer mins, so layout cannot perturb
     // results.
-    var (labels, labelsRdd) = materializeOwnedKeyed(
+    var labelsCut = cuts.cutKeyed(
       edges.select(col("src").as("id")).distinct()
         .withColumn("component", col("id"))
-        .repartition(col("id")), checkpointDir.isDefined)
+        .repartition(col("id")))
+    var labels = labelsCut
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < MaxCcIterations) {
@@ -1744,12 +1768,12 @@ object Dedup {
       val nbrMin = edges
         .join(labels.select(col("id").as("dst"), col("component").as("nbr_comp")), "dst")
         .groupBy(col("src").as("id")).agg(min("nbr_comp").as("nbr_comp"))
-      val (propagated, propagatedRdd) = materializeOwnedKeyed(
+      val propagated = cuts.cutKeyed(
         labels.join(nbrMin, Seq("id"), "left")
           .select(col("id"),
             least(col("component"), coalesce(col("nbr_comp"), col("component")))
               .as("component"),
-            col("component").as("old")), checkpointDir.isDefined)
+            col("component").as("old")))
       // pointer jump: resolve each label to ITS label (labels only ever
       // shrink, so label(label(id)) <= label(id) — this is what turns a
       // k-long chain into k/2, giving O(log) total rounds); the previous
@@ -1760,25 +1784,21 @@ object Dedup {
       // instead of a count job plus the convergence count (propagated
       // stays EAGER — the self-join reads it on two legs, and a lazy
       // first compute would race its own cache)
-      val (next, nextRdd) = materializeOwnedKeyedLazy(
+      val next = cuts.cutKeyedLazy(
         propagated.alias("u")
           .join(propagated.select(col("id").as("component"), col("component").as("jump"))
             .alias("p"), Seq("component"), "left")
           .select(col("id"), coalesce(col("jump"), col("component")).as("component"),
             col("old"))
-          .repartition(col("id")),
-        checkpointDir.isDefined)
+          .repartition(col("id")))
       changed = next.filter(col("component") =!= col("old")).count()
-      retire(spark, labelsRdd)
-      retire(spark, propagatedRdd)
+      cuts.retire(labelsCut)
+      cuts.retire(propagated)
       labels = next.select("id", "component")
-      labelsRdd = nextRdd
+      labelsCut = next
       iter += 1
     }
-    retire(spark, edgesRdd)
-    val finalRdd = labelsRdd
-    ComponentsHandle(labels, iter, () => retire(spark, finalRdd))
-    }
+    ComponentsHandle(labels, iter, cuts.handOff(labelsCut))
   }
 
   /** Converged component labels over the memoized pair graph, an
@@ -1790,9 +1810,9 @@ object Dedup {
     * the [[ComponentsHandle]] — the deliberate, bounded version of what
     * would otherwise be a per-call leak. */
   private[graft] def componentsCached(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, s"components#$dir") { ckpt =>
-      val handle = componentsOfManaged(
-        minhashPairsCached(spark, dir).select("doc_a", "doc_b"), ckpt)
+    memoized(spark, s"components#$dir") {
+      val pairs = minhashPairsCached(spark, dir).select("doc_a", "doc_b")
+      val handle = withCuts(spark)(componentsIn(_, pairs))
       (handle.labels, handle.release)
     }
 

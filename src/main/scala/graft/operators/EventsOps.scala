@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
@@ -414,7 +414,7 @@ object EventsOps {
     * with silent holes is wrong in exactly the hours that matter, the
     * outage ones). Emits one row per (event_type × hour) cell of the
     * corpus' full [min, max] hour span: observed cells carry their
-    * count and DECIMAL-exact hourly average; empty cells carry
+    * count and exact 4dp hourly average; empty cells carry
     * n_events = 0, a `filled` flag, and the last PRIOR observed average
     * forward-filled (`last(..., ignoreNulls)` over the per-type
     * hour-ordered window — the carry-forward semantics of every
@@ -427,22 +427,36 @@ object EventsOps {
     * (`sequence` + `explode`, no driver round-trip), the ffill window
     * runs per type over that bounded grid, and the join of spine to
     * observations is grid-sized. Nothing downstream of the first
-    * aggregate ever touches the corpus again. Averages divide a
-    * DECIMAL-exact sum by an exact count and round to 4dp in both
-    * engines (partition-order independence); hours cross the oracle as
-    * strings (the temporal-parity rule). */
+    * aggregate ever touches the corpus again. Averages are exact in
+    * both engines: values sum as integer 10⁻⁴ units, the 4dp mean is
+    * the integer quotient rounded half away from zero ([[mean4]]), and
+    * only that result converts to DOUBLE — so neither partition order
+    * nor an engine's DOUBLE rounding of a half-way tie can move it;
+    * hours cross the oracle as strings (the temporal-parity rule). */
   def resampleHourly(spark: SparkSession, dir: String): DataFrame =
     resampleHourlyOf(Tables.events(spark, dir))
+
+  /** `s4 / n` rounded half away from zero to an integer number of
+    * 10⁻⁴ units, as a DOUBLE: integer arithmetic on |s4| (so truncating
+    * and flooring division agree), one division by 10⁴ at the end. A
+    * DOUBLE `round(sum / n, 4)` is not exact: Spark rounds the double's
+    * decimal string half-up while DuckDB rounds its binary value, so a
+    * half-way mean such as 49.06625 came out 49.0663 in one engine and
+    * 49.0662 in the other. */
+  private[graft] def mean4(s4: String, n: String): Column =
+    expr(s"CAST(CASE WHEN $s4 < 0 THEN -1 ELSE 1 END * " +
+      s"((2 * abs($s4) + $n) div (2 * $n)) AS DOUBLE) / 10000")
 
   def resampleHourlyOf(ev: DataFrame): DataFrame = {
     // the observed grid feeds three consumers (spine bounds, the type
     // set, the join) — materialized once so the corpus is scanned
     // exactly once (lazy sharing would re-run the scan per consumer)
-    val (obs, _) = Dedup.materializeOwned(ev
+    val obs = Dedup.unownedCut(ev
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("n_obs"),
-        round(sum(col("value").cast("decimal(18,4)")).cast("double") /
-          count(lit(1)), 4).as("obs_avg")), reliable = false)
+        sum((col("value").cast("decimal(18,4)") * 10000).cast("long")).as("s4"))
+      .select(col("hour"), col("event_type"), col("n_obs"),
+        mean4("s4", "n_obs").as("obs_avg")))
     // spine bounds and the type set both derive from the ALREADY
     // AGGREGATED grid, not the log — the corpus is scanned exactly once
     val bounds = obs.agg(min(col("hour")).as("h_lo"), max(col("hour")).as("h_hi"))

@@ -218,12 +218,19 @@ object Graph {
     * materialization discipline as [[pagerankRanks]]: the edge frame is
     * pre-shuffled by `src` once with its layout preserved, each round's
     * |V|-row state is owned and retired when superseded, and the final
-    * round is retained one-slot under `retainKey`. */
+    * round is retained one-slot under `retainKey`.
+    *
+    * Precondition: `edges0` is SYMMETRIC — (u, v) present iff (v, u)
+    * is, as [[knnEdges]] and [[copurchaseEdges]] build it. The fused
+    * step carries each node's state on its own self row and scatters
+    * rank only along out-edges, so a node with in-edges but no
+    * out-edges would have no `deg` to divide by and its mass would
+    * leave the graph; symmetry gives every node out-degree ≥ 1 and
+    * makes the dangling-mass term vanish (suite-pinned for every
+    * registered caller's edge frame). */
   private[graft] def pagerankConvergedRanks(edges0: DataFrame,
       retainKey: String): DataFrame = {
-    val spark = edges0.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
+    Dedup.withCuts(edges0.sparkSession) { cuts =>
       // NOTE (r14 audit): under AQE this Spark's localCheckpoint records
       // UnknownPartitioning whatever the input layout, so this keyed cut
       // does NOT survive to the round joins — each job re-exchanges the
@@ -234,9 +241,8 @@ object Graph {
       // recomputed per consumer (edges blocks re-read per step, exec
       // 19.5→269 s) — so the exchange-per-job shape is kept
       // deliberately.
-      val (edges, edgesRdd) = Dedup.materializeOwnedKeyed(
-        edges0.repartition(col("src")).sortWithinPartitions("src"),
-        ckDir.isDefined)
+      val edges = cuts.cutKeyed(
+        edges0.repartition(col("src")).sortWithinPartitions("src"))
       val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       // N is a 1-row census the init division needs on both engines;
       // base mirrors the oracle's (PrPrec // n) * 3 // 20 exactly
@@ -247,10 +253,10 @@ object Graph {
       // KEYED init: `deg` rides the edge frame's preserved hash(src)
       // layout (its aggregate plans no exchange), and the keyed cut
       // hands the loop a state frame already partitioned by `node`
-      var (cur, curRdd) = Dedup.materializeOwnedKeyed(
+      var curCut = cuts.cutKeyed(
         deg.select(col("src").as("node"), col("deg"), lit(base).as("r"))
-          .repartition(col("node")),
-        ckDir.isDefined)
+          .repartition(col("node")))
+      var cur = curCut
       // FUSED damped step (r14, VERDICT #3 — the loop was driver-stage
       // bound: 170 stages for 29 exec-s): the r13 shape ran
       // join→agg→join(→repartition) per step; now the state's own rows
@@ -315,13 +321,12 @@ object Graph {
           System.err.println("[round-plan pagerank_conv]\n" +
             roundFrame.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode))
-        val (next, nextRdd) = Dedup.materializeOwnedKeyedLazy(
-          roundFrame, ckDir.isDefined)
+        val next = cuts.cutKeyedLazy(roundFrame)
         val row = next.agg(
           sum(s"dl1").as("d1"),
           (2 to depth).map(k => sum(s"dl$k").as(s"d$k")): _*).head()
         val ds = (1 to depth).map(k => row.getLong(k - 1))
-        Dedup.retire(spark, curRdd)
+        cuts.retire(curCut)
         val stopK = ds.indexWhere(_ < PrTol) match {
           case -1 => depth
           case i  => i + 1
@@ -329,12 +334,11 @@ object Graph {
         cur = next.select(col("node"), col("deg"), col(s"r$stopK").as("r"))
         delta = ds(stopK - 1)
         rounds += stopK
-        curRdd = nextRdd
+        curCut = next
       }
-      Dedup.retire(spark, edgesRdd)
-      Dedup.retainResult(spark, retainKey, curRdd,
-        cur.select(col("node"), col("deg"), col("r").as("fp_rank"),
-          lit(rounds).as("rounds")))
+      cuts.keep(retainKey, curCut)
+      cur.select(col("node"), col("deg"), col("r").as("fp_rank"),
+        lit(rounds).as("rounds"))
     }
   }
 
@@ -422,12 +426,10 @@ object Graph {
     * surfaced as CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). */
   private[graft] def pagerankRanks(edges0: DataFrame,
       retainKey: String = "pagerankRanks"): DataFrame = {
-    val spark = edges0.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
+    Dedup.withCuts(edges0.sparkSession) { cuts =>
       // The edge frame is the loop's STATIC side: pre-shuffle it by the
       // join key ONCE and keep that layout across the cut
-      // (materializeOwnedKeyed — the plain owned form erases
+      // (a keyed cut — the plain owned form erases
       // partitioning, so every round re-exchanged AND re-sorted the
       // |E|-row frame; r12 listener evidence: 3× edge exchanges and
       // ~2.4 GB/round of shuffle at 10× sf0.1 for a frame that never
@@ -436,18 +438,17 @@ object Graph {
       // iteration remains (ReuseExchange dedups the per-reference
       // copies); the measured declared-layout alternative traded it for
       // per-consumer recompute and lost — see pagerankConvergedRanks.
-      val (edges, edgesRdd) = Dedup.materializeOwnedKeyed(
-        edges0.repartition(col("src")).sortWithinPartitions("src"),
-        ckDir.isDefined)
+      val edges = cuts.cutKeyed(
+        edges0.repartition(col("src")).sortWithinPartitions("src"))
       val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       val n = deg.agg(count(lit(1)).cast("double").as("n"))
       // KEYED init (r13): the cut hands the loop a state frame already
       // partitioned by `node`.
-      val (init, initRdd) = Dedup.materializeOwnedKeyed(
+      val init = cuts.cutKeyed(
         deg.crossJoin(broadcast(n))
           .select(col("src").as("node"), col("deg"), col("n"),
             (lit(1.0) / col("n")).as("r"))
-          .repartition(col("node")), ckDir.isDefined)
+          .repartition(col("node")))
       // FUSED damped step (r14, the conv loop's shape applied to the
       // fixed-iteration arm): the state's own rows union into the
       // scatter stream with contribution 0.0, so one aggregate gathers
@@ -456,8 +457,7 @@ object Graph {
       // are bit-identical: adding 0.0 terms to a double sum is exact
       // (x + 0.0 == x for every finite x), and the no-inflow case the
       // old coalesce handled is exactly the self row's 0.0.
-      val (result, resultRdd) = (1 to PrIters)
-          .foldLeft[(DataFrame, org.apache.spark.rdd.RDD[_])]((init, initRdd)) { case ((cur, curRdd), _) =>
+      val result = (1 to PrIters).foldLeft(init) { (cur, _) =>
         val scatter = edges
           .join(cur.select(col("node").as("src"), col("r"), col("deg")), "src")
           .select(col("dst").as("node"), (col("r") / col("deg")).as("c"),
@@ -465,28 +465,26 @@ object Graph {
             lit(null).cast("double").as("n0"))
         val self = cur.select(col("node"), lit(0.0).as("c"),
           col("deg").as("deg0"), col("n").as("n0"))
-        val (next, nextRdd) = Dedup.materializeOwnedKeyed(
+        val next = cuts.cutKeyed(
           scatter.unionByName(self)
             .groupBy("node")
             .agg(sum("c").as("inflow"), max("deg0").as("deg"),
               max("n0").as("n"))
             .select(col("node"), col("deg"), col("n"),
               (lit(1 - Damping) / col("n") +
-                lit(Damping) * col("inflow")).as("r")),
-          ckDir.isDefined)
-        Dedup.retire(spark, curRdd)
-        (next, nextRdd)
+                lit(Damping) * col("inflow")).as("r")))
+        cuts.retire(cur)
+        next
       }
       // the final round is self-contained (its RDD holds the rank rows),
       // so the EDGE frame — the big pin, |E| rows vs |V| for the ranks —
-      // is released before returning; repeated calls previously
+      // is released at scope exit; repeated calls previously
       // accumulated one 2.4M-row block set each at sf0.1, and the
       // storage pressure taxed every later query in a long session.
       // The |V|-row final round itself is retained one-slot (a repeat
       // call retires the previous result's blocks — same bound as the
       // other eagerly-materialized queries).
-      Dedup.retire(spark, edgesRdd)
-      Dedup.retainResult(spark, retainKey, resultRdd, result)
+      cuts.keep(retainKey, result)
     }
   }
 }

@@ -797,10 +797,8 @@ object Layout {
     // probe-bounded; owned + retained ONE-SLOT under the registered
     // caller's key (the memo-staleness trade every retained query makes;
     // keys are per-caller so Verify's pool cannot cross-evict).
-    val (probes, probesRdd) = graft.operators.Dedup.materializeOwned(
-      probes0, reliable = false)
-    graft.operators.Dedup.retainResult(spark, s"$retainKey#probes",
-      probesRdd, probes)
+    val probes = Dedup.withCuts(spark, None)(cuts =>
+      cuts.keep(s"$retainKey#probes", cuts.cut(probes0)))
     // per-file filter size from the persisted manifest: the |files|-row
     // sizing frame every coordinate computation joins (broadcast)
     val sizes = sizes0.select("shard", "mbits")
@@ -813,10 +811,8 @@ object Layout {
       .groupBy("probe_id", "expected", "shard")
       .agg(count(lit(1)).as("n_matched"))
       .filter(col("n_matched") === BloomHashes)
-    val (surv, survRdd) = graft.operators.Dedup.materializeOwned(
-      surv0, reliable = false)
-    graft.operators.Dedup.retainResult(spark, s"$retainKey#surv",
-      survRdd, surv)
+    val surv = Dedup.withCuts(spark, None)(cuts =>
+      cuts.keep(s"$retainKey#surv", cuts.cut(surv0)))
     // the physical prune: only Bloom-surviving shard partitions are
     // opened (bounded driver-side manifest decision, ≤ |files| rows —
     // the same class of collect as the footer reads in

@@ -639,6 +639,13 @@ object SimSearch {
   val KmFpOff = 2.0
   val KmFpScale = 1000000L
 
+  /** Exclusive upper bound of a fixed-point coordinate: an embedding
+    * domain of |v| < [[KmFpOff]] puts every shifted coordinate in
+    * [0, 2·KmFpOff·KmFpScale) = [0, 4·10⁶) — the range the packed
+    * argmin's overflow headroom in [[kmeansConvReportOf]] is computed
+    * for. */
+  val KmFpMax: Long = (2 * KmFpOff * KmFpScale).toLong
+
   /** L1 stop: Σ|c_next − c_cur| < [[KmConvTol]] fixed-point units over
     * the K×dims state — i.e. average per-coordinate movement under
     * 10⁻⁶. Reachable by construction: Lloyd with deterministic
@@ -683,9 +690,13 @@ object SimSearch {
     * report retained one-slot. */
   private[graft] def kmeansConvReportOf(e: DataFrame,
       retainKey: String): DataFrame = {
-    val spark = e.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
+    def checkFpDomain(what: String, lo: Long, hi: Long): Unit =
+      require(lo >= 0L && hi < KmFpMax,
+        s"$what fixed-point coordinates span [$lo, $hi], outside " +
+          s"[0, KmFpMax=$KmFpMax): the embedding domain must lie within " +
+          s"±KmFpOff=$KmFpOff for the shift and the packed argmin's " +
+          "overflow bound to hold")
+    Dedup.withCuts(e.sparkSession) { cuts =>
       def fpLongForm(df: DataFrame) =
         df.select(col("vec_id"), posexplode(col("embedding")))
           .select(col("vec_id"), col("pos").as("d"),
@@ -702,24 +713,31 @@ object SimSearch {
       // lesson that interpreted per-element lambdas lose to codegen'd
       // relational operators even at bounded volume. All state is
       // BIGINT fixed-point; layout cannot perturb results.
-      val (tvecs, tvecsRdd) = Dedup.materializeOwnedKeyed(
+      val tvecs = cuts.cutKeyed(
         fpLongForm(e.join(broadcast(train.select("vec_id")), "vec_id"))
-          .repartition(col("vec_id")), ckDir.isDefined)
+          .repartition(col("vec_id")))
       // fixed-point precondition, machine-checked (the BloomAbsentShift
-      // lesson): the offset must clear every coordinate positive
-      val minVs = tvecs.agg(min("vs")).head().getLong(0)
-      require(minVs >= 0L,
-        s"KmFpOff=$KmFpOff does not clear the embedding domain " +
-          s"(min fixed-point coordinate $minVs) — raise the offset")
+      // lesson): every coordinate must land in [0, KmFpMax) — the
+      // offset clears it positive, and the upper bound is what the
+      // packed argmin's overflow argument below needs
+      val vsRange = tvecs.agg(min("vs"), max("vs")).head()
+      checkFpDomain("train", vsRange.getLong(0), vsRange.getLong(1))
       val seeds = e.select("vec_id").orderBy("vec_id").limit(KmK)
         .select(col("vec_id"),
           (row_number().over(Window.orderBy("vec_id")) - 1).cast("long")
             .as("cent_id"))
-      val (init, initRdd) = Dedup.materializeOwned(
+      // the seeds come from `e`, not the train sample, so they are
+      // bounded too — by the cut's materializing action itself (one
+      // job, as an eager cut's count), not an extra one
+      val init = cuts.cutLazy(
         fpLongForm(e.join(broadcast(seeds.select("vec_id")), "vec_id"))
           .join(broadcast(seeds), "vec_id")
-          .select(col("cent_id"), col("d"), col("vs").as("c")),
-        ckDir.isDefined)
+          .select(col("cent_id"), col("d"), col("vs").as("c")))
+      val (cMin, cMax) = init.rdd.map(_.getAs[Long]("c"))
+        .aggregate((Long.MaxValue, Long.MinValue))(
+          (a, c) => (math.min(a._1, c), math.max(a._2, c)),
+          (a, b) => (math.min(a._1, b._1), math.max(a._2, b._2)))
+      checkFpDomain("seed", cMin, cMax)
       // argmin FOLDED into an aggregate (r14, VERDICT #4): the r13
       // shape ranked (d2, cent_id) with a row_number window — an extra
       // in-partition sort + window pass per round. The argmin is ONE
@@ -730,8 +748,8 @@ object SimSearch {
       // and planned as SortAggregate + two extra sorts — struct buffers
       // are not hash-aggregable). Overflow headroom is construction-
       // bounded: d2 ≤ dims·(4·10⁶)² ≈ 1.0e15, ×K=8 ≈ 8.2e15 ≪ 2⁶³
-      // (coordinates are offset-positive and < 4·10⁶ fixed-point units
-      // by the minVs check + |v| < 2 domain).
+      // (coordinates are offset-positive and < 4·10⁶ fixed-point units,
+      // both machine-checked above for the train rows and the seeds).
       def assignTo(cents: DataFrame) = {
         tvecs.join(broadcast(cents.select("cent_id", "d", "c")), "d")
           .groupBy("vec_id", "cent_id")
@@ -741,7 +759,6 @@ object SimSearch {
           .select(col("vec_id"), (col("m") % lit(KmK)).as("cent_id"))
       }
       var cur = init
-      var curRdd = initRdd
       var rounds = 0
       var delta = Long.MaxValue
       // NOTE (r13): the pagerank-conv two-round unroll was tried here
@@ -781,12 +798,10 @@ object SimSearch {
           System.err.println("[round-plan kmeans_conv]\n" +
             roundFrame.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode))
-        val (next, nextRdd) = Dedup.materializeOwnedLazy(
-          roundFrame, ckDir.isDefined)
+        val next = cuts.cutLazy(roundFrame)
         delta = next.agg(sum("dl")).head().getLong(0)
-        Dedup.retire(spark, curRdd)
+        cuts.retire(cur)
         cur = next
-        curRdd = nextRdd
         rounds += 1
       }
       val report = assignTo(cur)
@@ -795,10 +810,7 @@ object SimSearch {
         .select(col("cent_id"), col("n_members"), col("c_sum"),
           lit(rounds.toLong).as("rounds"))
         .orderBy("cent_id")
-      val (res, resRdd) = Dedup.materializeOwned(report, ckDir.isDefined)
-      Dedup.retire(spark, tvecsRdd)
-      Dedup.retire(spark, curRdd)
-      Dedup.retainResult(spark, retainKey, resRdd, res)
+      cuts.keep(retainKey, cuts.cut(report))
     }
   }
 
@@ -2454,9 +2466,7 @@ object SimSearch {
       while (i < a.length) { val d = a(i) - b(i).toDouble; acc += d * d; i += 1 }
       acc
     }
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      def mat(df: DataFrame) = Dedup.materializeOwned(df, ckDir.isDefined)
+    Dedup.withCuts(spark) { cuts =>
       val e = e0.select("vec_id", "embedding")
       val seedId = seedRow.getLong(0)
       val seedEmb = e.filter(col("vec_id") === seedId)
@@ -2467,7 +2477,7 @@ object SimSearch {
             .select(col("vec_id"), col("embedding"),
               coalesce(col("cell"), lit(-1L)).as("cell"))
         else e.withColumn("cell", lit(-1L))
-      var (state, stateRdd) = mat(
+      var state = cuts.cut(
         withCell.crossJoin(broadcast(seedEmb))
           .select(col("vec_id"), col("embedding"), col("cell"),
             round(l2sq(col("embedding"), col("c_emb")), 6).as("min_d2")))
@@ -2494,7 +2504,7 @@ object SimSearch {
           // the LAST pass's admissions are final — nobody reads the
           // post-update state, so don't pay a corpus pass producing it
           if (p < passes) {
-          val (next, nextRdd) = mat(admitted.foldLeft(state) { (s, a) =>
+          val next = cuts.cut(admitted.foldLeft(state) { (s, a) =>
             val upd = least(col("min_d2"),
               round(l2sq(col("embedding"), typedLit(a._2)), 6))
             if (!pruning) s.withColumn("min_d2", upd)
@@ -2522,12 +2532,11 @@ object SimSearch {
                 when(col("cell").isin(active: _*), upd).otherwise(col("min_d2")))
             }
           })
-          Dedup.retire(spark, stateRdd)
-          state = next; stateRdd = nextRdd
+          cuts.retire(state)
+          state = next
           }
         }
       }
-      Dedup.retire(spark, stateRdd)
       sel.toSeq.toDF("round", "vec_id", "radius").orderBy("round", "vec_id")
     }
   }
@@ -2540,14 +2549,12 @@ object SimSearch {
     val seedRow = e0.agg(min("vec_id")).collect()(0)
     if (seedRow.isNullAt(0))
       return Seq.empty[(Long, Long, Double)].toDF("round", "vec_id", "radius")
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      def mat(df: DataFrame) = Dedup.materializeOwned(df, ckDir.isDefined)
+    Dedup.withCuts(spark) { cuts =>
       val e = e0.select("vec_id", "embedding")
       val seedId = seedRow.getLong(0)
       def centerEmb(id: Long) = e.filter(col("vec_id") === id)
         .select(col("embedding").as("c_emb"))
-      var (state, stateRdd) = mat(
+      var state = cuts.cut(
         e.crossJoin(broadcast(centerEmb(seedId)))
           .select(col("vec_id"), col("embedding"),
             round(l2sq(col("embedding"), col("c_emb")), 6).as("min_d2")))
@@ -2555,15 +2562,14 @@ object SimSearch {
       (2 to k).foreach { i =>
         val r = state.orderBy(desc("min_d2"), asc("vec_id")).limit(1).collect()(0)
         sel += ((i.toLong, r.getLong(0), r.getDouble(2)))
-        val (next, nextRdd) = mat(
+        val next = cuts.cut(
           state.crossJoin(broadcast(centerEmb(r.getLong(0))))
             .select(col("vec_id"), col("embedding"),
               least(col("min_d2"),
                 round(l2sq(col("embedding"), col("c_emb")), 6)).as("min_d2")))
-        Dedup.retire(spark, stateRdd)
-        state = next; stateRdd = nextRdd
+        cuts.retire(state)
+        state = next
       }
-      Dedup.retire(spark, stateRdd)
       sel.toSeq.toDF("round", "vec_id", "radius").orderBy("round")
     }
   }
@@ -2677,15 +2683,14 @@ object SimSearch {
       while (i < a.length) { val d = a(i) - b(i).toDouble; acc += d * d; i += 1 }
       acc
     }
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      def mat(df: DataFrame) = Dedup.materializeOwned(df, ckDir.isDefined)
-      var (state, stateRdd) = mat(
+    Dedup.withCuts(spark) { cuts =>
+      var stateCut = cuts.cut(
         e0.select("vec_id", "embedding")
           .join(assign, Seq("vec_id"), "left")
           .select(col("vec_id"), col("embedding"),
             coalesce(col("cell"), lit(-1L)).as("cell"),
             round(l2sq(col("embedding"), typedLit(seedEmb)), 6).as("min_d2")))
+      var state = stateCut
       var layers = 0
       // cell → (max min_d2, argmax vec_id, argmax embedding): the
       // driver-side argmax index. max_by's ordering struct replays the
@@ -2731,16 +2736,15 @@ object SimSearch {
           else when(col("cell").isin(active: _*), upd).otherwise(col("min_d2")))
         layers += 1
         if (layers >= matEvery && i < k) {
-          val (next, nextRdd) = mat(state)
-          Dedup.retire(spark, stateRdd)
-          state = next; stateRdd = nextRdd; layers = 0
+          val next = cuts.cut(state)
+          cuts.retire(stateCut)
+          stateCut = next; state = next; layers = 0
         }
         // refresh the argmax index for touched cells only (filter
         // pushes below the chained projections to the materialized scan)
         if (i < k)
           stats = stats ++ statsOf(state.filter(col("cell").isin(active: _*)))
       }
-      Dedup.retire(spark, stateRdd)
       sel.toSeq.toDF("round", "vec_id", "radius").orderBy("round")
     }
   }
@@ -2798,27 +2802,20 @@ object SimSearch {
     coresetLightweightOf(Tables.fanOut(Tables.embeddings(spark, dir)))
 
   private[graft] def coresetLightweightOf(e0: DataFrame): DataFrame = {
-    val spark = e0.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
+    Dedup.withCuts(e0.sparkSession) { cuts =>
       // the scoring frame is materialized because both the Σd² total
       // and the final draw read it (lazy sharing would re-run the
       // corpus scan, mean subtree included)
-      val (scored, scoredRdd) = Dedup.materializeOwned(
-        coresetScoredOf(e0), ckDir.isDefined)
-      val (out, outRdd) = Dedup.materializeOwned(
-        coresetTailOf(scored), ckDir.isDefined)
-      Dedup.retire(spark, scoredRdd)
-      Dedup.retainResult(spark, "coresetLightweight", outRdd, out)
+      val scored = cuts.cut(coresetScoredOf(e0))
+      cuts.keep("coresetLightweight", cuts.cut(coresetTailOf(scored)))
     }
   }
 
   /** Plan-audit hook: the live draw tail over the materialized scoring
     * frame (the registered query returns the retained ExistingRDD). */
   private[graft] def coresetPlanOf(spark: SparkSession, dir: String): DataFrame = {
-    val (scored, _) = Dedup.materializeOwned(
-      coresetScoredOf(Tables.fanOut(Tables.embeddings(spark, dir))),
-      reliable = false)
+    val scored = Dedup.unownedCut(
+      coresetScoredOf(Tables.fanOut(Tables.embeddings(spark, dir))))
     coresetTailOf(scored)
   }
 

@@ -267,11 +267,8 @@ object TextAnalysis {
     * vocabulary is fully merged (tiny corpora — real ones never are). */
   private[graft] def bpeMergesOf(docs: DataFrame, rounds: Int)
       : Seq[(Long, String, String, String, Long)] = {
-    val spark = docs.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      def materialize(df: DataFrame) = Dedup.materializeOwned(df, ckDir.isDefined)
-      var (cur, curRdd) = materialize(bpeVocab(docs))
+    Dedup.withCuts(docs.sparkSession) { cuts =>
+      var cur = cuts.cut(bpeVocab(docs))
       val merges = scala.collection.mutable.ArrayBuffer
         .empty[(Long, String, String, String, Long)]
       var round = 1
@@ -286,14 +283,13 @@ object TextAnalysis {
           // lhs/rhs are alphanumeric by construction (BpeWordPattern
           // closure: merged symbols stay alphanumeric), so inlining them
           // into the literal-replace SQL is injection-safe
-          val (next, nextRdd) = materialize(cur.withColumn("seg",
+          val next = cuts.cut(cur.withColumn("seg",
             expr(s"replace(seg, '|$lhs||$rhs|', '|$lhs$rhs|')")))
-          Dedup.retire(spark, curRdd)
-          cur = next; curRdd = nextRdd
+          cuts.retire(cur)
+          cur = next
           round += 1
         }
       }
-      Dedup.retire(spark, curRdd)
       merges.toSeq
     }
   }
@@ -935,11 +931,8 @@ object TextAnalysis {
     * so repeated calls can't accumulate block storage. */
   def boilerplateStripOf(docs: DataFrame, n: Int = SpanN,
                          minDf: Int = BoilerMinDf): DataFrame = {
-    val spark = docs.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      def materialize(df: DataFrame) = Dedup.materializeOwned(df, ckDir.isDefined)
-      val (d, dRdd) = materialize(
+    Dedup.withCuts(docs.sparkSession) { cuts =>
+      val d = cuts.cut(
         docs.select(col("doc_id"), col("source"), toks(col("text")).as("toks"))
           .filter(size(col("toks")) >= 1))
       // source rides the projection (not a join-back onto a second scan);
@@ -954,7 +947,7 @@ object TextAnalysis {
       // interpreted-lambda slice + joined string + hex string — the
       // r13-graded GC-band variance of this query was allocation rate
       // (guide §5), and the key width halves again on top
-      val (grams, gramsRdd) = materialize(
+      val grams = cuts.cut(
         d.select(col("doc_id"), col("source"),
             posexplode(wordNgramMd5(col("toks"), n)))
           .select(col("doc_id"), col("source"), col("pos"), col("col").as("g")))
@@ -977,19 +970,17 @@ object TextAnalysis {
           sum(coalesce(col("removed"), lit(0L))).as("tokens_removed"))
       val gramsPerSource = hits.groupBy("source")
         .agg(countDistinct("g").as("boiler_grams"))
-      val (out, outRdd) = materialize(
+      val out = cuts.cut(
         perSource.join(gramsPerSource, Seq("source"), "left")
           .select(col("source"), col("n_docs"), col("tokens_total"),
             coalesce(col("boiler_grams"), lit(0L)).as("boiler_grams"),
             col("tokens_removed"),
             round(col("tokens_removed") / col("tokens_total"), 4).as("removed_frac"))
           .orderBy("source"))
-      Dedup.retire(spark, gramsRdd)
-      Dedup.retire(spark, dRdd)
       // key carries the dials: two registered queries share this body
       // at different thresholds, and a shared key would let one retire
       // the other's still-in-use result under Verify's thread pool
-      Dedup.retainResult(spark, s"boilerplateStrip#$n#$minDf", outRdd, out)
+      cuts.keep(s"boilerplateStrip#$n#$minDf", out)
     }
   }
 
@@ -1010,15 +1001,12 @@ object TextAnalysis {
     // `grams` feeds the df-agg AND the membership join, `d` feeds the
     // gram build AND the kept-token rebuild — materialize both, retire
     // the corpus-sized pins once the per-doc digest is computed
-    val spark = docs.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      def materialize(df: DataFrame) = Dedup.materializeOwned(df, ckDir.isDefined)
-      val (d, dRdd) = materialize(
+    Dedup.withCuts(docs.sparkSession) { cuts =>
+      val d = cuts.cut(
         docs.select(col("doc_id"), toks(col("text")).as("toks"))
           .filter(size(col("toks")) >= 1))
       // fused binary md5 gram digests, as in [[boilerplateStripOf]]
-      val (grams, gramsRdd) = materialize(
+      val grams = cuts.cut(
         d.select(col("doc_id"), posexplode(wordNgramMd5(col("toks"), n)))
           .select(col("doc_id"), col("pos"), col("col").as("g")))
       val boiler = grams.groupBy("g")
@@ -1032,18 +1020,16 @@ object TextAnalysis {
       val kept = d.select(col("doc_id"), posexplode(col("toks")))
         .select(col("doc_id"), col("pos"), col("col").as("tok"))
         .join(covered, Seq("doc_id", "pos"), "left_anti")
-      val (out, outRdd) = materialize(
+      val out = cuts.cut(
         kept.groupBy("doc_id")
           .agg(count(lit(1)).as("n_kept"),
             md5(concat_ws(" ",
               transform(array_sort(collect_list(struct(col("pos"), col("tok")))),
                 x => x.getField("tok")))).as("cleaned_md5"))
           .orderBy("doc_id"))
-      Dedup.retire(spark, gramsRdd)
-      Dedup.retire(spark, dRdd)
       // dialed key — see boilerplateStripOf (q_text_boilerplate_apply
       // and q_dedup_span_apply share this body at different minDf)
-      Dedup.retainResult(spark, s"boilerplateApply#$n#$minDf", outRdd, out)
+      cuts.keep(s"boilerplateApply#$n#$minDf", out)
     }
   }
 
@@ -1091,14 +1077,9 @@ object TextAnalysis {
 
   def dupSpanApplyMaximalOf(docs: DataFrame, n: Int = SpanN,
       minLen: Int = SpanDedupMinLen): DataFrame = {
-    val spark = docs.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      val (out, owned) =
-        spanMaximalBuild(docs, n, minLen, ckDir.isDefined)
-      val (res, resRdd) = Dedup.materializeOwned(out, ckDir.isDefined)
-      owned.foreach(Dedup.retire(spark, _))
-      Dedup.retainResult(spark, s"dupSpanMaximal#$n#$minLen", resRdd, res)
+    Dedup.withCuts(docs.sparkSession) { cuts =>
+      cuts.keep(s"dupSpanMaximal#$n#$minLen",
+        cuts.cut(spanMaximalBuild(docs, n, minLen, cuts.cut)))
     }
   }
 
@@ -1107,52 +1088,47 @@ object TextAnalysis {
     * a retained `ExistingRDD`). */
   private[graft] def dupSpanMaximalPlanOf(spark: SparkSession, dir: String): DataFrame =
     spanMaximalBuild(Tables.fanOut(Tables.documents(spark, dir)),
-      SpanN, SpanDedupMinLen, reliable = false)._1
+      SpanN, SpanDedupMinLen, Dedup.unownedCut)
 
   private def spanMaximalBuild(docs: DataFrame, n: Int, minLen: Int,
-      reliable: Boolean)
-      : (DataFrame, Seq[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]) = {
-    locally {
-      def materialize(df: DataFrame) = Dedup.materializeOwned(df, reliable)
-      val (d, dRdd) = materialize(
-        docs.select(col("doc_id"), toks(col("text")).as("toks"))
-          .filter(size(col("toks")) >= 1))
-      val (grams, gramsRdd) = materialize(
-        d.select(col("doc_id"), posexplode(wordNgramMd5(col("toks"), n)))
-          .select(col("doc_id"), col("pos"), col("col").as("g")))
-      val shared = grams.groupBy("g")
-        .agg(countDistinct("doc_id").as("df_docs"))
-        .filter(col("df_docs") >= 2)
-        .select("g")
-      // gaps-and-islands: consecutive duplicated gram starts share
-      // (pos − row_number), each island is one maximal duplicated run
-      val wi = Window.partitionBy("doc_id").orderBy("pos")
-      val runs = grams.join(shared, "g")
-        .select("doc_id", "pos")
-        .withColumn("island", col("pos") - row_number().over(wi))
-        .groupBy("doc_id", "island")
-        .agg(min("pos").as("run_start"),
-          (max("pos") + lit(n - 1)).as("run_end"))
-        .filter(col("run_end") - col("run_start") + 1 >= minLen)
-      val covered = runs.select(col("doc_id"),
-        explode(sequence(col("run_start"), col("run_end"))).as("pos"))
-      val nRuns = runs.groupBy("doc_id")
-        .agg(count(lit(1)).as("runs_stripped"))
-      val kept = d.select(col("doc_id"), posexplode(col("toks")))
-        .select(col("doc_id"), col("pos"), col("col").as("tok"))
-        .join(covered, Seq("doc_id", "pos"), "left_anti")
-      val out = kept.groupBy("doc_id")
-        .agg(count(lit(1)).as("n_kept"),
-          md5(concat_ws(" ",
-            transform(array_sort(collect_list(struct(col("pos"), col("tok")))),
-              x => x.getField("tok")))).as("cleaned_md5"))
-        .join(nRuns, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("runs_stripped"), lit(0L)).as("runs_stripped"),
-          col("n_kept"), col("cleaned_md5"))
-        .orderBy("doc_id")
-      (out, Seq(dRdd, gramsRdd))
-    }
+      cut: DataFrame => DataFrame): DataFrame = {
+    val d = cut(
+      docs.select(col("doc_id"), toks(col("text")).as("toks"))
+        .filter(size(col("toks")) >= 1))
+    val grams = cut(
+      d.select(col("doc_id"), posexplode(wordNgramMd5(col("toks"), n)))
+        .select(col("doc_id"), col("pos"), col("col").as("g")))
+    val shared = grams.groupBy("g")
+      .agg(countDistinct("doc_id").as("df_docs"))
+      .filter(col("df_docs") >= 2)
+      .select("g")
+    // gaps-and-islands: consecutive duplicated gram starts share
+    // (pos − row_number), each island is one maximal duplicated run
+    val wi = Window.partitionBy("doc_id").orderBy("pos")
+    val runs = grams.join(shared, "g")
+      .select("doc_id", "pos")
+      .withColumn("island", col("pos") - row_number().over(wi))
+      .groupBy("doc_id", "island")
+      .agg(min("pos").as("run_start"),
+        (max("pos") + lit(n - 1)).as("run_end"))
+      .filter(col("run_end") - col("run_start") + 1 >= minLen)
+    val covered = runs.select(col("doc_id"),
+      explode(sequence(col("run_start"), col("run_end"))).as("pos"))
+    val nRuns = runs.groupBy("doc_id")
+      .agg(count(lit(1)).as("runs_stripped"))
+    val kept = d.select(col("doc_id"), posexplode(col("toks")))
+      .select(col("doc_id"), col("pos"), col("col").as("tok"))
+      .join(covered, Seq("doc_id", "pos"), "left_anti")
+    kept.groupBy("doc_id")
+      .agg(count(lit(1)).as("n_kept"),
+        md5(concat_ws(" ",
+          transform(array_sort(collect_list(struct(col("pos"), col("tok")))),
+            x => x.getField("tok")))).as("cleaned_md5"))
+      .join(nRuns, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("runs_stripped"), lit(0L)).as("runs_stripped"),
+        col("n_kept"), col("cleaned_md5"))
+      .orderBy("doc_id")
   }
 
   /** The persisted GRAM-DF INDEX of a corpus — the static side of
@@ -1808,15 +1784,9 @@ object TextAnalysis {
 
   /** [[dsirResample]] over any (doc_id, lang, source, text) frame. */
   def dsirResampleOf(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      val (db, dbRdd) =
-        Dedup.materializeOwned(dsirBuckets(docs), ckDir.isDefined)
-      val (out, outRdd) =
-        Dedup.materializeOwned(dsirPipeline(docs, db), ckDir.isDefined)
-      Dedup.retire(spark, dbRdd)
-      Dedup.retainResult(spark, s"dsirResample#$DsirBuckets#$DsirK", outRdd, out)
+    Dedup.withCuts(docs.sparkSession) { cuts =>
+      val db = cuts.cut(dsirBuckets(docs))
+      cuts.keep(s"dsirResample#$DsirBuckets#$DsirK", cuts.cut(dsirPipeline(docs, db)))
     }
   }
 
@@ -1917,20 +1887,15 @@ object TextAnalysis {
     * is the regime the broadcast is designed for (the same honesty note
     * as `semanticDecontaminate`'s EvalIdCap). */
   def curationFunnel(spark: SparkSession, dir: String): DataFrame = {
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      def materialize(df: DataFrame) = Dedup.materializeOwned(df, ckDir.isDefined)
+    Dedup.withCuts(spark) { cuts =>
       val docs = Tables.fanOut(Tables.documents(spark, dir))
-      val (tokd, tokdRdd) = materialize(
+      val tokd = cuts.cut(
         docs.select(col("doc_id"), col("lang"), col("source"), col("text"),
           toks(col("text")).as("toks")))
-      val (db, dbRdd) = materialize(dsirBucketsFromToks(
+      val db = cuts.cut(dsirBucketsFromToks(
         tokd.select(col("doc_id"), (col("lang") === "en").as("is_target"),
           col("toks"))))
-      val (out, outRdd) = materialize(curationCensusFrom(tokd, db))
-      Dedup.retire(spark, dbRdd)
-      Dedup.retire(spark, tokdRdd)
-      Dedup.retainResult(spark, "curationFunnel", outRdd, out)
+      cuts.keep("curationFunnel", cuts.cut(curationCensusFrom(tokd, db)))
     }
   }
 
@@ -2402,11 +2367,8 @@ object TextAnalysis {
     * refactor bit-for-bit). */
   private[graft] def qualityLrModelOf(docs: DataFrame, rate: Long,
       iters: Int): DataFrame = {
-    val spark = docs.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      def materialize(df: DataFrame) = Dedup.materializeOwned(df, ckDir.isDefined)
-      val (withN, withNRdd) = materialize(lrFeaturesOf(docs))
+    Dedup.withCuts(docs.sparkSession) { cuts =>
+      val withN = cuts.cut(lrFeaturesOf(docs))
       val nDocs = withN.filter(col("bucket") =!= -1L)
         .select("doc_id").distinct().agg(count(lit(1)).as("nn"))
       // per-doc probability under a nano-fixed-point weight frame;
@@ -2442,19 +2404,10 @@ object TextAnalysis {
       }
       // unrolled training loop, each weight frame pinned (bucket-bounded)
       var w: Option[DataFrame] = None
-      val pins = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
-      (1 to iters).foreach { _ =>
-        val (wf, wfRdd) = materialize(step(w))
-        pins += wfRdd
-        w = Some(wf)
-      }
+      (1 to iters).foreach { _ => w = Some(cuts.cut(step(w))) }
       // re-materialize the FINAL weights under their own retention so
-      // every per-step pin (including the last) can be retired here
-      val (out, outRdd) = materialize(w.get)
-      pins.foreach(Dedup.retire(spark, _))
-      Dedup.retire(spark, withNRdd)
-      Dedup.retainResult(spark, s"qualityLrModel#$rate#$iters", outRdd, out)
+      // every per-step pin (including the last) is retired at scope exit
+      cuts.keep(s"qualityLrModel#$rate#$iters", cuts.cut(w.get))
     }
   }
 
@@ -2490,25 +2443,19 @@ object TextAnalysis {
     * registered pair shares [[bigramDomCached]]'s memoized census
     * through here; the `Of`-variant recomputes it self-contained. */
   private def doremiMixFrom(weights: DataFrame, docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      val (wts, wtsRdd) =
-        Dedup.materializeOwned(weights, ckDir.isDefined)
+    Dedup.withCuts(docs.sparkSession) { cuts =>
+      val wts = cuts.cut(weights)
       val drawn = drawnCensus(docs,
         wts.select(col("lang"), col("boost").as("rate")))
       val joined = wts.join(drawn, Seq("lang"), "left")
         .withColumn("docs_out", coalesce(col("docs_out"), lit(0L)))
       val tot = joined.agg(sum("docs_out").as("out_total"))
-      val (out, outRdd) = Dedup.materializeOwned(
+      cuts.keep("doremiMix", cuts.cut(
         joined.crossJoin(broadcast(tot))
           .select(col("lang"), col("n_docs"), col("alpha"),
             col("boost").as("rate"), col("docs_out"),
             round(col("docs_out") / col("out_total"), 6).as("achieved_share"))
-          .orderBy("lang"),
-        ckDir.isDefined)
-      Dedup.retire(spark, wtsRdd)
-      Dedup.retainResult(spark, "doremiMix", outRdd, out)
+          .orderBy("lang")))
     }
   }
 
@@ -2555,15 +2502,9 @@ object TextAnalysis {
     * round-robin fan-out exchanges never canonicalize equal, so
     * `ReusedExchange` cannot be relied on to dedupe the five subtrees). */
   def bm25RetrieveOf(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      val (tf, tfRdd) = Dedup.materializeOwned(bm25Postings(docs),
-        ckDir.isDefined)
-      val (out, outRdd) = Dedup.materializeOwned(bm25From(tf, docs),
-        ckDir.isDefined)
-      Dedup.retire(spark, tfRdd)
-      Dedup.retainResult(spark, "bm25Retrieve", outRdd, out)
+    Dedup.withCuts(docs.sparkSession) { cuts =>
+      val tf = cuts.cut(bm25Postings(docs))
+      cuts.keep("bm25Retrieve", cuts.cut(bm25From(tf, docs)))
     }
   }
 
@@ -2572,7 +2513,7 @@ object TextAnalysis {
     * `ExistingRDD`). */
   private[graft] def bm25PlanOf(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.fanOut(Tables.documents(spark, dir))
-    val (tf, _) = Dedup.materializeOwned(bm25Postings(docs), reliable = false)
+    val tf = Dedup.unownedCut(bm25Postings(docs))
     bm25From(tf, docs)
   }
 
@@ -2876,40 +2817,39 @@ object TextAnalysis {
       .withColumn("impact", round(bm25Idf * bm25Norm, 6))
       .withColumn("impact_fp", round(col("impact") * 1e6, 0).cast("long"))
     val w = Window.partitionBy("word").orderBy(desc("impact"), asc("doc_id"))
-    val (ranked, rankedRdd) = Dedup.materializeOwned(
-      idx.withColumn("irnk", row_number().over(w))
-        .select("doc_id", "word", "impact_fp", "irnk"),
-      reliable = false)
-    val qTerms = queries
-      .select(col("query_id"), explode(array_distinct(toks(col("text")))).as("word"))
-    def top10(index: DataFrame): DataFrame = {
-      // fixed-point sums: rank boundaries at 4dp cannot move with
-      // accumulation order (same discipline as the serve)
-      val scored = qTerms.join(index, "word")
-        .groupBy("query_id", "doc_id")
-        .agg((floor((sum("impact_fp") + lit(50)) / lit(100.0)) / 1e4)
-          .as("score"))
-      val wq = Window.partitionBy("query_id").orderBy(desc("score"), asc("doc_id"))
-      scored.withColumn("rnk", row_number().over(wq))
-        .filter(col("rnk") <= 10).select("query_id", "doc_id")
+    Dedup.withCuts(spark, None) { cuts =>
+      val ranked = cuts.cut(
+        idx.withColumn("irnk", row_number().over(w))
+          .select("doc_id", "word", "impact_fp", "irnk"))
+      val qTerms = queries
+        .select(col("query_id"), explode(array_distinct(toks(col("text")))).as("word"))
+      def top10(index: DataFrame): DataFrame = {
+        // fixed-point sums: rank boundaries at 4dp cannot move with
+        // accumulation order (same discipline as the serve)
+        val scored = qTerms.join(index, "word")
+          .groupBy("query_id", "doc_id")
+          .agg((floor((sum("impact_fp") + lit(50)) / lit(100.0)) / 1e4)
+            .as("score"))
+        val wq = Window.partitionBy("query_id").orderBy(desc("score"), asc("doc_id"))
+        scored.withColumn("rnk", row_number().over(wq))
+          .filter(col("rnk") <= 10).select("query_id", "doc_id")
+      }
+      val full10 = top10(ranked)
+      val nQ = lit(queries.count())
+      val rows = Bm25CapSweep.map { cap =>
+        top10(ranked.filter(col("irnk") <= cap))
+          .join(full10, Seq("query_id", "doc_id"), "left_semi")
+          .agg(count(lit(1)).as("hits10"))
+          .select(lit(cap).as("cap"), nQ.as("n_queries"), col("hits10"),
+            round(col("hits10").cast("double") / (nQ * 10.0), 4).as("recall10"))
+      }
+      val reference = full10.agg(count(lit(1)).as("hits10"))
+        .select(lit(0).as("cap"), nQ.as("n_queries"), col("hits10"),
+          lit(1.0).as("recall10"))
+      val out = rows.reduce(_ unionByName _).unionByName(reference)
+        .orderBy("cap")
+      cuts.keep("bm25CapSweep", cuts.cut(out))
     }
-    val full10 = top10(ranked)
-    val nQ = lit(queries.count())
-    val rows = Bm25CapSweep.map { cap =>
-      top10(ranked.filter(col("irnk") <= cap))
-        .join(full10, Seq("query_id", "doc_id"), "left_semi")
-        .agg(count(lit(1)).as("hits10"))
-        .select(lit(cap).as("cap"), nQ.as("n_queries"), col("hits10"),
-          round(col("hits10").cast("double") / (nQ * 10.0), 4).as("recall10"))
-    }
-    val reference = full10.agg(count(lit(1)).as("hits10"))
-      .select(lit(0).as("cap"), nQ.as("n_queries"), col("hits10"),
-        lit(1.0).as("recall10"))
-    val out = rows.reduce(_ unionByName _).unionByName(reference)
-      .orderBy("cap")
-    val (res, resRdd) = Dedup.materializeOwned(out, reliable = false)
-    Dedup.retire(spark, rankedRdd)
-    Dedup.retainResult(spark, "bm25CapSweep", resRdd, res)
   }
 
   /** Registered form: [[bm25ServeInc]]'s probe workload (odd doc_ids
@@ -2956,15 +2896,9 @@ object TextAnalysis {
 
   /** [[rrfFuse]] over an explicit `(doc_id, text)` frame. */
   def rrfFuseOf(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      val (tf, tfRdd) = Dedup.materializeOwned(bm25Postings(docs),
-        ckDir.isDefined)
-      val (out, outRdd) = Dedup.materializeOwned(rrfFrom(tf, docs),
-        ckDir.isDefined)
-      Dedup.retire(spark, tfRdd)
-      Dedup.retainResult(spark, "rrfFuse", outRdd, out)
+    Dedup.withCuts(docs.sparkSession) { cuts =>
+      val tf = cuts.cut(bm25Postings(docs))
+      cuts.keep("rrfFuse", cuts.cut(rrfFrom(tf, docs)))
     }
   }
 
@@ -2973,7 +2907,7 @@ object TextAnalysis {
     * `ExistingRDD`). */
   private[graft] def rrfPlanOf(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.fanOut(Tables.documents(spark, dir))
-    val (tf, _) = Dedup.materializeOwned(bm25Postings(docs), reliable = false)
+    val tf = Dedup.unownedCut(bm25Postings(docs))
     rrfFrom(tf, docs)
   }
 
@@ -3117,12 +3051,9 @@ object TextAnalysis {
     * ≤ queries×depth rows — audit cost is serving cost, not a second
     * corpus pass. */
   def retrievalRankQuality(spark: SparkSession, dir: String): DataFrame = {
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      val (out, owned) = rankQualityBuild(spark, dir, ckDir.isDefined)
-      val (res, resRdd) = Dedup.materializeOwned(out, ckDir.isDefined)
-      owned.foreach(Dedup.retire(spark, _))
-      Dedup.retainResult(spark, "retrievalRankQuality", resRdd, res)
+    Dedup.withCuts(spark) { cuts =>
+      cuts.keep("retrievalRankQuality",
+        cuts.cut(rankQualityBuild(spark, dir, cuts.cut)))
     }
   }
 
@@ -3130,91 +3061,83 @@ object TextAnalysis {
     * index/vector-leg/ideal frames (the registered query returns a
     * retained `ExistingRDD`). */
   private[graft] def rankQualityPlanOf(spark: SparkSession, dir: String): DataFrame =
-    rankQualityBuild(spark, dir, reliable = false)._1
+    rankQualityBuild(spark, dir, Dedup.unownedCut)
 
   private def rankQualityBuild(spark: SparkSession, dir: String,
-      reliable: Boolean)
-      : (DataFrame, Seq[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]) = {
+      cut: DataFrame => DataFrame): DataFrame = {
     val docs = Tables.fanOut(Tables.documents(spark, dir))
     val queries = docs.filter(col("doc_id") < Bm25NQueries)
       .select(col("doc_id").as("query_id"), col("text"))
-    locally {
-      val (idx, idxRdd) = Dedup.materializeOwned(
-        bm25IndexOf(docs)
-          .withColumn("impact", round(bm25Idf * bm25Norm, 6))
-          .withColumn("impact_fp", round(col("impact") * 1e6, 0).cast("long")),
-        reliable)
-      val (vecR, vecRdd) = Dedup.materializeOwned(
-        vecRankedOf(spark, dir), reliable)
-      val lexFull = bm25ScoreOf(queries, idx)
-        .filter(col("doc_id") =!= col("query_id"))
-      // r14 (VERDICT #5): the uncapped lexical ranking is consumed by
-      // TWO arms (the ideal hybrid's fusion leg and the bm25-only arm)
-      // — the r13 shape re-ran the full bm25ScoreOf pass over the
-      // materialized index per consumer. One queries×depth cut serves
-      // both; the capped leg shares nothing with it (different index
-      // slice), honestly left as its own pass.
-      val (lexR, lexRdd) = Dedup.materializeOwned(
-        lexRankedOf(lexFull), reliable)
-      val wCap = Window.partitionBy("word").orderBy(desc("impact"), asc("doc_id"))
-      val capped = idx.withColumn("irnk", row_number().over(wCap))
-        .filter(col("irnk") <= Bm25CapK)
-        .select("doc_id", "word", "impact", "impact_fp")
-      val lexCapped = bm25CappedScoreOf(queries, capped)
-        .filter(col("doc_id") =!= col("query_id"))
-      val (ideal, idealRdd) = Dedup.materializeOwned(
-        rrfFusedOf(lexR, vecR)
-          .filter(col("rank") <= NdcgDepth)
-          .select(col("query_id"), col("doc_id"), col("rank").as("irank")),
-        reliable)
-      val capped10 = rrfFusedOf(lexRankedOf(lexCapped), vecR)
+    val idx = cut(
+      bm25IndexOf(docs)
+        .withColumn("impact", round(bm25Idf * bm25Norm, 6))
+        .withColumn("impact_fp", round(col("impact") * 1e6, 0).cast("long")))
+    val vecR = cut(vecRankedOf(spark, dir))
+    val lexFull = bm25ScoreOf(queries, idx)
+      .filter(col("doc_id") =!= col("query_id"))
+    // r14 (VERDICT #5): the uncapped lexical ranking is consumed by
+    // TWO arms (the ideal hybrid's fusion leg and the bm25-only arm)
+    // — the r13 shape re-ran the full bm25ScoreOf pass over the
+    // materialized index per consumer. One queries×depth cut serves
+    // both; the capped leg shares nothing with it (different index
+    // slice), honestly left as its own pass.
+    val lexR = cut(lexRankedOf(lexFull))
+    val wCap = Window.partitionBy("word").orderBy(desc("impact"), asc("doc_id"))
+    val capped = idx.withColumn("irnk", row_number().over(wCap))
+      .filter(col("irnk") <= Bm25CapK)
+      .select("doc_id", "word", "impact", "impact_fp")
+    val lexCapped = bm25CappedScoreOf(queries, capped)
+      .filter(col("doc_id") =!= col("query_id"))
+    val ideal = cut(
+      rrfFusedOf(lexR, vecR)
         .filter(col("rank") <= NdcgDepth)
-        .select("query_id", "doc_id", "rank")
-      val bm10 = lexR
-        .select(col("query_id"), col("doc_id"), col("rank_lex").as("rank"))
-      val disc = typedLit(NdcgDiscFp)
-      val idcg = ideal.groupBy("query_id")
-        .agg(sum((lit(11L) - col("irank")) *
-          element_at(disc, col("irank").cast("int"))).as("idcg_fp"))
-      val top1 = ideal.filter(col("irank") === 1).select("query_id", "doc_id")
-      // r14: the three arms' DCG/MRR chains run as ONE union'd grid —
-      // the r13 shape ran armOf(name, arm) three times (4 joins + 2
-      // aggregates each over ≤ queries×depth rows), and the query was
-      // stage-count bound, not data bound (probe: 60 stages for a
-      // handful of 50-row joins). Tagging each arm with its system name
-      // and keying every join/aggregate by (system, query_id) computes
-      // the identical per-arm algebra in one chain; the idcg×systems
-      // grid reproduces armOf's all-queries row count per arm.
-      def tagged(name: String, arm: DataFrame): DataFrame =
-        arm.select(lit(name).as("system"), col("query_id"),
-          col("doc_id"), col("rank"))
-      val arms = tagged("bm25", bm10)
-        .unionByName(tagged("hybrid",
-          ideal.select(col("query_id"), col("doc_id"), col("irank").as("rank"))))
-        .unionByName(tagged("hybrid_capped", capped10))
-      val dcg = arms.join(ideal, Seq("query_id", "doc_id"), "left")
-        .groupBy("system", "query_id")
-        .agg(sum(coalesce(lit(11L) - col("irank"), lit(0L)) *
-          element_at(disc, col("rank").cast("int"))).as("dcg_fp"))
-      val rr = arms.join(top1, Seq("query_id", "doc_id"))
-        .select(col("system"), col("query_id"),
-          expr("1000000 div rank").as("rr_fp"))
-      val spark2 = ideal.sparkSession
-      import spark2.implicits._
-      val systems = Seq("bm25", "hybrid", "hybrid_capped").toDF("system")
-      val out = idcg.crossJoin(broadcast(systems))
-        .join(dcg, Seq("system", "query_id"), "left")
-        .join(rr, Seq("system", "query_id"), "left")
-        .select(col("system"),
-          expr("(coalesce(dcg_fp, 0) * 10000) div idcg_fp").as("ndcg_fp"),
-          coalesce(col("rr_fp"), lit(0L)).as("rr_fp"))
-        .groupBy("system")
-        .agg(count(lit(1)).as("n_queries"),
-          (expr("sum(ndcg_fp) div count(1)") / 1e4).as("ndcg10"),
-          (expr("sum(rr_fp) div count(1)") / 1e6).as("mrr"))
-        .orderBy("system")
-      (out, Seq(idxRdd, vecRdd, lexRdd, idealRdd))
-    }
+        .select(col("query_id"), col("doc_id"), col("rank").as("irank")))
+    val capped10 = rrfFusedOf(lexRankedOf(lexCapped), vecR)
+      .filter(col("rank") <= NdcgDepth)
+      .select("query_id", "doc_id", "rank")
+    val bm10 = lexR
+      .select(col("query_id"), col("doc_id"), col("rank_lex").as("rank"))
+    val disc = typedLit(NdcgDiscFp)
+    val idcg = ideal.groupBy("query_id")
+      .agg(sum((lit(11L) - col("irank")) *
+        element_at(disc, col("irank").cast("int"))).as("idcg_fp"))
+    val top1 = ideal.filter(col("irank") === 1).select("query_id", "doc_id")
+    // r14: the three arms' DCG/MRR chains run as ONE union'd grid —
+    // the r13 shape ran armOf(name, arm) three times (4 joins + 2
+    // aggregates each over ≤ queries×depth rows), and the query was
+    // stage-count bound, not data bound (probe: 60 stages for a
+    // handful of 50-row joins). Tagging each arm with its system name
+    // and keying every join/aggregate by (system, query_id) computes
+    // the identical per-arm algebra in one chain; the idcg×systems
+    // grid reproduces armOf's all-queries row count per arm.
+    def tagged(name: String, arm: DataFrame): DataFrame =
+      arm.select(lit(name).as("system"), col("query_id"),
+        col("doc_id"), col("rank"))
+    val arms = tagged("bm25", bm10)
+      .unionByName(tagged("hybrid",
+        ideal.select(col("query_id"), col("doc_id"), col("irank").as("rank"))))
+      .unionByName(tagged("hybrid_capped", capped10))
+    val dcg = arms.join(ideal, Seq("query_id", "doc_id"), "left")
+      .groupBy("system", "query_id")
+      .agg(sum(coalesce(lit(11L) - col("irank"), lit(0L)) *
+        element_at(disc, col("rank").cast("int"))).as("dcg_fp"))
+    val rr = arms.join(top1, Seq("query_id", "doc_id"))
+      .select(col("system"), col("query_id"),
+        expr("1000000 div rank").as("rr_fp"))
+    val spark2 = ideal.sparkSession
+    import spark2.implicits._
+    val systems = Seq("bm25", "hybrid", "hybrid_capped").toDF("system")
+    idcg.crossJoin(broadcast(systems))
+      .join(dcg, Seq("system", "query_id"), "left")
+      .join(rr, Seq("system", "query_id"), "left")
+      .select(col("system"),
+        expr("(coalesce(dcg_fp, 0) * 10000) div idcg_fp").as("ndcg_fp"),
+        coalesce(col("rr_fp"), lit(0L)).as("rr_fp"))
+      .groupBy("system")
+      .agg(count(lit(1)).as("n_queries"),
+        (expr("sum(ndcg_fp) div count(1)") / 1e4).as("ndcg10"),
+        (expr("sum(rr_fp) div count(1)") / 1e6).as("mrr"))
+      .orderBy("system")
   }
 
   private def rrfFrom(tf: DataFrame, docs: DataFrame): DataFrame = {
@@ -3320,12 +3243,9 @@ object TextAnalysis {
     * (one pass over the materialized `dl`). Values are unchanged — the
     * cuts pin exactly the rows the lazy form recomputed. */
   private def bm25PartsMaterialized(tf: DataFrame, docs: DataFrame,
-      reliable: Boolean)
-      : (Bm25Parts, Seq[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]) = {
-    val (df, dfRdd) = Dedup.materializeOwned(
-      tf.groupBy("word").agg(count(lit(1)).as("df")), reliable)
-    val (dl, dlRdd) = Dedup.materializeOwned(
-      tf.groupBy("doc_id").agg(sum("tf").as("dl")), reliable)
+      cut: DataFrame => DataFrame): Bm25Parts = {
+    val df = cut(tf.groupBy("word").agg(count(lit(1)).as("df")))
+    val dl = cut(tf.groupBy("doc_id").agg(sum("tf").as("dl")))
     val stats = dl.agg(count(lit(1)).cast("double").as("n"),
       avg("dl").as("avgdl"))
     val n1 = docs.agg(count(lit(1)).as("n"))
@@ -3335,10 +3255,10 @@ object TextAnalysis {
         round(col("tf") * log(col("n").cast("double") / col("df")), 4)
           .as("tscore"))
     val qw = Window.partitionBy("query_id").orderBy(desc("tscore"), asc("word"))
-    val (qt, qtRdd) = Dedup.materializeOwned(
+    val qt = cut(
       qscored.withColumn("trank", row_number().over(qw))
-        .filter(col("trank") <= 3).select("query_id", "word"), reliable)
-    (Bm25Parts(df, dl, stats, qt), Seq(dfRdd, dlRdd, qtRdd))
+        .filter(col("trank") <= 3).select("query_id", "word"))
+    Bm25Parts(df, dl, stats, qt)
   }
 
   /** Okapi scores for WEIGHTED query terms — (query_id, word, qweight)
@@ -3404,20 +3324,13 @@ object TextAnalysis {
     rm3RetrieveOf(Tables.fanOut(Tables.documents(spark, dir)))
 
   def rm3RetrieveOf(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      val (tf, tfRdd) = Dedup.materializeOwned(bm25Postings(docs),
-        ckDir.isDefined)
+    Dedup.withCuts(docs.sparkSession) { cuts =>
+      val tf = cuts.cut(bm25Postings(docs))
       // r14: df/dl/queryTerms pinned once (see [[bm25PartsMaterialized]])
       // so the two serve passes and the relevance-model join read cuts
       // instead of re-running postings-wide aggregates per reference
-      val (parts, partRdds) = bm25PartsMaterialized(tf, docs, ckDir.isDefined)
-      val (out, outRdd) = Dedup.materializeOwned(
-        rm3FromParts(tf, parts, Rm3Lambda), ckDir.isDefined)
-      partRdds.foreach(Dedup.retire(spark, _))
-      Dedup.retire(spark, tfRdd)
-      Dedup.retainResult(spark, "rm3Retrieve", outRdd, out)
+      val parts = bm25PartsMaterialized(tf, docs, cuts.cut)
+      cuts.keep("rm3Retrieve", cuts.cut(rm3FromParts(tf, parts, Rm3Lambda)))
     }
   }
 
@@ -3425,10 +3338,10 @@ object TextAnalysis {
     * PLANS.md audit hook. */
   private[graft] def rm3PlanOf(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.fanOut(Tables.documents(spark, dir))
-    val (tf, _) = Dedup.materializeOwned(bm25Postings(docs), reliable = false)
+    val tf = Dedup.unownedCut(bm25Postings(docs))
     // mirror the registered query's materialized parts (r14) so the
     // audited dataflow is the executed one
-    val (parts, _) = bm25PartsMaterialized(tf, docs, reliable = false)
+    val parts = bm25PartsMaterialized(tf, docs, Dedup.unownedCut)
     rm3FromParts(tf, parts, Rm3Lambda)
   }
 
@@ -3527,25 +3440,21 @@ object TextAnalysis {
     * report is retained one-slot and the corpus-sized stream blocks are
     * retired before returning ([[bottomKUnionOf]]'s discipline). */
   def heavyHittersOf(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val (organic, organicRdd) = Dedup.materializeOwned(
-      hhOrganicOf(docs), reliable = false)
-    val stream = hhStreamOf(organic)
-    val mgUdf = udaf(new graft.functions.MisraGriesAggregator(HhCapacity))
-    val (pass1, pass1Rdd) = Dedup.materializeOwned(
-      stream.agg(mgUdf(col("item")).as("cands"),
-        count(lit(1)).as("n_total")),
-      reliable = false)
-    val candidates = pass1.select(explode(col("cands")).as("item"))
-    val report = counts(stream, candidates)
-      .crossJoin(broadcast(pass1.select("n_total")))
-      .filter(col("cnt") * HhK > col("n_total"))
-      .orderBy(desc("cnt"), asc("item"))
-      .select("item", "cnt", "n_total")
-    val (res, resRdd) = Dedup.materializeOwned(report, reliable = false)
-    Dedup.retire(spark, organicRdd)
-    Dedup.retire(spark, pass1Rdd)
-    Dedup.retainResult(spark, "heavyHitters", resRdd, res)
+    Dedup.withCuts(docs.sparkSession, None) { cuts =>
+      val organic = cuts.cut(hhOrganicOf(docs))
+      val stream = hhStreamOf(organic)
+      val mgUdf = udaf(new graft.functions.MisraGriesAggregator(HhCapacity))
+      val pass1 = cuts.cut(
+        stream.agg(mgUdf(col("item")).as("cands"),
+          count(lit(1)).as("n_total")))
+      val candidates = pass1.select(explode(col("cands")).as("item"))
+      val report = counts(stream, candidates)
+        .crossJoin(broadcast(pass1.select("n_total")))
+        .filter(col("cnt") * HhK > col("n_total"))
+        .orderBy(desc("cnt"), asc("item"))
+        .select("item", "cnt", "n_total")
+      cuts.keep("heavyHitters", cuts.cut(report))
+    }
   }
 
   /** The exploded organic bigram stream. */
@@ -3577,9 +3486,8 @@ object TextAnalysis {
     * candidate recount. */
   private[graft] def heavyHittersPlanOf(spark: SparkSession,
       dir: String): DataFrame = {
-    val (organic, _) = Dedup.materializeOwned(
-      hhOrganicOf(Tables.fanOut(Tables.documents(spark, dir))),
-      reliable = false)
+    val organic = Dedup.unownedCut(
+      hhOrganicOf(Tables.fanOut(Tables.documents(spark, dir))))
     val stream = hhStreamOf(organic)
     val mgUdf = udaf(new graft.functions.MisraGriesAggregator(HhCapacity))
     val pass1 = stream.agg(mgUdf(col("item")).as("cands"),
@@ -3627,8 +3535,8 @@ object TextAnalysis {
     * `ExistingRDD`). */
   private[graft] def bottomKUnionPlanOf(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.fanOut(Tables.documents(spark, dir))
-    val (ha, _) = Dedup.materializeOwned(bkuHashes(docs, 2), reliable = false)
-    val (hb, _) = Dedup.materializeOwned(bkuHashes(docs, 3), reliable = false)
+    val ha = Dedup.unownedCut(bkuHashes(docs, 2))
+    val hb = Dedup.unownedCut(bkuHashes(docs, 3))
     bottomKUnionFrom(ha, hb)
   }
 
@@ -3645,16 +3553,10 @@ object TextAnalysis {
     * production only the ≤k-row SKETCHES persist and the audit runs on
     * a sampled cadence. */
   def bottomKUnionOf(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val ckDir = Dedup.confCheckpointDir(spark)
-    Dedup.withCheckpointDir(spark, ckDir) {
-      val (ha, haRdd) = Dedup.materializeOwned(bkuHashes(docs, 2), ckDir.isDefined)
-      val (hb, hbRdd) = Dedup.materializeOwned(bkuHashes(docs, 3), ckDir.isDefined)
-      val (out, outRdd) = Dedup.materializeOwned(bottomKUnionFrom(ha, hb),
-        ckDir.isDefined)
-      Dedup.retire(spark, haRdd)
-      Dedup.retire(spark, hbRdd)
-      Dedup.retainResult(spark, "bottomKUnion", outRdd, out)
+    Dedup.withCuts(docs.sparkSession) { cuts =>
+      val ha = cuts.cut(bkuHashes(docs, 2))
+      val hb = cuts.cut(bkuHashes(docs, 3))
+      cuts.keep("bottomKUnion", cuts.cut(bottomKUnionFrom(ha, hb)))
     }
   }
 

@@ -68,6 +68,40 @@ class KmeansConvSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(1)).sum == pts.length.toLong)
   }
 
+  test("a train coordinate past the fixed-point domain is refused, and the call's cuts are freed") {
+    // 2.0 shifts to 4·10⁶ units, the first value outside [0, KmFpMax)
+    val e = Seq((0L, Seq(0.1f, 0.2f)), (1L, Seq(2.0f, 0.0f)), (2L, Seq(-0.3f, 0.4f)))
+      .toDF("vec_id", "embedding")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val err = intercept[IllegalArgumentException](
+      SimSearch.kmeansConvReportOf(e, "kmeansConvSpecDomain"))
+    assert(err.getMessage.contains(s"KmFpMax=${SimSearch.KmFpMax}"), err.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet -- before == Set.empty)
+  }
+
+  test("a seed outside the train sample is bounded too") {
+    // seeds are the KmK lowest vec_ids of the whole frame, not of the
+    // capped train sample: take the id with the largest train-sample
+    // key in [0, 3000) as the lowest id of cap + 1 vectors, so it is a
+    // seed AND the one vector the sample drops
+    val cap = SimSearch.KmTrainPerCent * SimSearch.KmK
+    val all = spark.range(0, 3000).toDF("vec_id")
+    val x = ((0L until 3000L).toSet --
+      SimSearch.trainIds(all, 2999).collect().map(_.getLong(0))).head
+    val ids = x to x + cap
+    val train = SimSearch.trainIds(ids.toDF("vec_id"), cap)
+      .collect().map(_.getLong(0)).toSet
+    assert(!train.contains(x) && train.size == cap)
+    val e = ids.map(i => (i, if (i == x) Seq(2.5f, 0.0f) else Seq(0.1f, 0.2f)))
+      .toDF("vec_id", "embedding")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val err = intercept[IllegalArgumentException](
+      SimSearch.kmeansConvReportOf(e, "kmeansConvSpecDomain"))
+    assert(err.getMessage.startsWith("requirement failed: seed"), err.getMessage)
+    assert(err.getMessage.contains(s"KmFpMax=${SimSearch.KmFpMax}"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet -- before == Set.empty)
+  }
+
   test("rerun serves the identical report") {
     val r1 = SimSearch.kmeansConvTop(spark, dir).collect().map(_.toString).toSeq
     val r2 = SimSearch.kmeansConvTop(spark, dir).collect().map(_.toString).toSeq

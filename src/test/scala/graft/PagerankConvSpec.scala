@@ -36,6 +36,21 @@ class PagerankConvSpec extends AnyFunSuite {
     (und ++ und.map { case (a, b) => (b, a) }).toDF("src", "dst")
   }
 
+  test("every registered caller's edge frame is symmetric") {
+    // the fused step's precondition (pagerankConvergedRanks/pagerankRanks
+    // scaladoc): (src, dst) EXCEPT (dst, src) is empty for the frames
+    // q_graph_pagerank, q_graph_pagerank_knn and q_graph_pagerank_conv
+    // feed the loops
+    val li = graft.sources.Tables.lineitem(spark, "/root/testdata/sf0.001")
+    Seq("copurchase" -> Graph.copurchaseEdges(li), "knn" -> Graph.knnEdges(li))
+      .foreach { case (name, e) =>
+        assert(e.count() > 0, name)
+        val oneWay = e.select("src", "dst")
+          .except(e.select(col("dst").as("src"), col("src").as("dst")))
+        assert(oneWay.count() == 0L, s"$name edges are not symmetric")
+      }
+  }
+
   test("stops under tol, conserves mass, at least one round") {
     val r = Graph.pagerankConvergedRanks(edges(), "convSpec1").collect()
     val rounds = r.head.getInt(3)

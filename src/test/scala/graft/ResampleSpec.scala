@@ -50,6 +50,21 @@ class ResampleSpec extends AnyFunSuite {
     assert(rows(("b", "2024-01-01 01:00")) == ((0L, None, true)))
   }
 
+  test("half-way hourly averages round half away from zero, exactly") {
+    // "h": 0.0001 and 0.0002 average to exactly 0.00015; "s": six
+    // values summing to 0.0045 average to exactly 0.00075, which a
+    // DOUBLE sum/count represents as 0.0007499999999999999 — so a
+    // double round reads 0.0007 where the exact 4dp mean is 0.0008
+    val vals = Seq("h" -> 0.0001, "h" -> 0.0002) ++
+      Seq(0.001, 0.001, 0.001, 0.001, 0.0004, 0.0001).map("s" -> _)
+    val half = vals.map { case (t, v) => (t, "2024-01-01 00:20:00", v) }
+      .toDF("event_type", "t", "value")
+      .select(col("event_type"), to_timestamp(col("t")).as("ts"), col("value"))
+    val avg = EventsOps.resampleHourlyOf(half).collect()
+      .map(r => r.getString(1) -> r.getDouble(3)).toMap
+    assert(avg == Map("h" -> 0.0002, "s" -> 0.0008))
+  }
+
   test("a series with no gaps emits no filled cells") {
     val dense = Seq(
       ("x", "2024-01-01 00:00:30", 1.0),
