@@ -133,19 +133,18 @@ object Scale {
       val (bandKeys, maxBucket) = (bandStats.getLong(0), bandStats.getLong(1))
       val (cands, tCands) = timedCount(Dedup.minhashCandidatesOf(docs))
       val t0p = System.nanoTime()
-      val pairs = Dedup.minhashPairsOf(docs)
-      val pairsMat = { val r = pairs.rdd; r.localCheckpoint(); r.count(); r }
-      val nPairs = pairsMat.count()
-      val tPairs = (System.nanoTime() - t0p) / 1e9
-      val pairsDf = spark.createDataFrame(pairsMat, pairs.schema)
+      val (nPairs, tPairs, ccNodes, tCc, ccRounds) = Dedup.withCuts(spark, None) { cuts =>
+        val pairs = cuts.cut(Dedup.minhashPairsOf(docs))
+        val nPairs = pairs.count()
+        val tPairs = (System.nanoTime() - t0p) / 1e9
 
-      val t0c = System.nanoTime()
-      val cc = Dedup.componentsOfManaged(pairsDf.select("doc_a", "doc_b"))
-      val ccNodes = cc.labels.count()
-      val tCc = (System.nanoTime() - t0c) / 1e9
-      val ccRounds = cc.rounds
-      cc.release()
-      pairsMat.unpersist(blocking = false)
+        val t0c = System.nanoTime()
+        val cc = Dedup.componentsOfManaged(pairs.select("doc_a", "doc_b"))
+        val ccNodes = cc.labels.count()
+        val tCc = (System.nanoTime() - t0c) / 1e9
+        cc.release()
+        (nPairs, tPairs, ccNodes, tCc, cc.rounds)
+      }
 
       // simhash: bucket occupancy and candidate volume are the scale
       // signals; the hamming<=3 OUTPUT count is data-dependent (on this
@@ -422,24 +421,24 @@ object Scale {
       val batch = graft.sources.Tables.fanOut(
           graft.sources.Tables.documents(spark, baseDir))
         .filter(col("doc_id") % 2 === 1)
-      val t0i = System.nanoTime()
-      val idx = graft.operators.TextAnalysis.spanGramIndexOf(corpus)
-      val idxMat = { val r = idx.rdd; r.localCheckpoint(); r.count(); r }
-      val nIdx = idxMat.count()
-      val tIdx = (System.nanoTime() - t0i) / 1e9
-      val idxDf = spark.createDataFrame(idxMat, idx.schema)
-      val t0s = System.nanoTime()
-      val screened = graft.operators.TextAnalysis.spanScreenOf(batch, idxDf).collect()
-      val tScreen = (System.nanoTime() - t0s) / 1e9
-      val nOut = screened.length
-      val keptToks = screened.map(_.getLong(1)).sum
-      val t0f = System.nanoTime()
-      val nFull = graft.operators.TextAnalysis
-        .boilerplateApplyOf(corpus.unionByName(batch),
-          graft.operators.TextAnalysis.SpanN, 2).count()
-      val tFull = (System.nanoTime() - t0f) / 1e9
-      s"| ${k}x | $nIdx | ${f"$tIdx%.1f"}s | $nOut | $keptToks | " +
-        s"${f"$tScreen%.1f"}s | $nFull | ${f"$tFull%.1f"}s |"
+      Dedup.withCuts(spark, None) { cuts =>
+        val t0i = System.nanoTime()
+        val idx = cuts.cut(graft.operators.TextAnalysis.spanGramIndexOf(corpus))
+        val nIdx = idx.count()
+        val tIdx = (System.nanoTime() - t0i) / 1e9
+        val t0s = System.nanoTime()
+        val screened = graft.operators.TextAnalysis.spanScreenOf(batch, idx).collect()
+        val tScreen = (System.nanoTime() - t0s) / 1e9
+        val nOut = screened.length
+        val keptToks = screened.map(_.getLong(1)).sum
+        val t0f = System.nanoTime()
+        val nFull = graft.operators.TextAnalysis
+          .boilerplateApplyOf(corpus.unionByName(batch),
+            graft.operators.TextAnalysis.SpanN, 2).count()
+        val tFull = (System.nanoTime() - t0f) / 1e9
+        s"| ${k}x | $nIdx | ${f"$tIdx%.1f"}s | $nOut | $keptToks | " +
+          s"${f"$tScreen%.1f"}s | $nFull | ${f"$tFull%.1f"}s |"
+      }
     }
     if (sections("spaninc")) {
       println()
@@ -468,9 +467,10 @@ object Scale {
         val nPairs = pairs.count()
         val tPairs = (System.nanoTime() - t0p) / 1e9
         val t0s = System.nanoTime()
-        val oldLabDf = Dedup.componentsOf(
+        val state = Dedup.componentsOfManaged(
           pairs.filter(col("doc_a") % 2 === 0 && col("doc_b") % 2 === 0))
-        val oldLab = cuts.cut(oldLabDf)
+        val oldLab = cuts.cut(state.labels)
+        state.release()
         val nState = oldLab.count()
         val tState = (System.nanoTime() - t0s) / 1e9
         val deltaPairs = pairs.filter(
@@ -480,8 +480,10 @@ object Scale {
         val upd = Dedup.ccIncrementalFrom(oldLab, deltaPairs).collect()
         val tMerge = (System.nanoTime() - t0m) / 1e9
         val t0f = System.nanoTime()
-        val nFull = Dedup.componentsOf(pairs).count()
+        val full = Dedup.componentsOfManaged(pairs)
+        val nFull = full.labels.count()
         val tFull = (System.nanoTime() - t0f) / 1e9
+        full.release()
         s"| ${k}x | $nPairs | ${f"$tPairs%.1f"}s | $nState | ${f"$tState%.1f"}s | " +
           s"${upd.length} | ${f"$tMerge%.1f"}s | $nFull | ${f"$tFull%.1f"}s |"
       }
@@ -594,27 +596,26 @@ object Scale {
       val base = replicatedEmbeddings(spark, baseDir, 1)
       val batch = base.filter(col("vec_id") % 2 === 1)
       val full = base // supplies the fixed query vectors (vec_id < 10)
-      def pin(df: DataFrame): (DataFrame, Long) = {
-        val r = df.rdd; r.localCheckpoint(); val n = r.count()
-        (spark.createDataFrame(r, df.schema), n)
+      Dedup.withCuts(spark, None) { cuts =>
+        val t0i = System.nanoTime()
+        val (cents0, book0, assign0, codes0) = SimSearch.annMergeScaleFrames(snap)
+        val cents = cuts.cut(cents0)
+        val book = cuts.cut(book0)
+        val assign = cuts.cut(assign0)
+        val codes = cuts.cutLazy(codes0)
+        val nCodes = codes.count()
+        val tIdx = (System.nanoTime() - t0i) / 1e9
+        val t0m = System.nanoTime()
+        val served = SimSearch.annMergeServeWith(full, cents, book,
+          assign, codes, batch).count()
+        val tMerge = (System.nanoTime() - t0m) / 1e9
+        val t0f = System.nanoTime()
+        val rebuilt = SimSearch.annIndexRebuildServeOf(full, snap,
+          snap.unionByName(batch)).count()
+        val tFull = (System.nanoTime() - t0f) / 1e9
+        s"| ${k}x | $nCodes | ${f"$tIdx%.1f"}s | $served | ${f"$tMerge%.1f"}s | " +
+          s"$rebuilt | ${f"$tFull%.1f"}s |"
       }
-      val t0i = System.nanoTime()
-      val (cents0, book0, assign0, codes0) = SimSearch.annMergeScaleFrames(snap)
-      val (cents, _) = pin(cents0)
-      val (book, _) = pin(book0)
-      val (assign, _) = pin(assign0)
-      val (codes, nCodes) = pin(codes0)
-      val tIdx = (System.nanoTime() - t0i) / 1e9
-      val t0m = System.nanoTime()
-      val served = SimSearch.annMergeServeWith(full, cents, book,
-        assign, codes, batch).count()
-      val tMerge = (System.nanoTime() - t0m) / 1e9
-      val t0f = System.nanoTime()
-      val rebuilt = SimSearch.annIndexRebuildServeOf(full, snap,
-        snap.unionByName(batch)).count()
-      val tFull = (System.nanoTime() - t0f) / 1e9
-      s"| ${k}x | $nCodes | ${f"$tIdx%.1f"}s | $served | ${f"$tMerge%.1f"}s | " +
-        s"$rebuilt | ${f"$tFull%.1f"}s |"
     }
     if (sections("annmerge")) {
       println()
@@ -648,22 +649,22 @@ object Scale {
           graft.sources.Tables.documents(spark, baseDir))
         .filter(col("doc_id") % 2 === 1 && col("doc_id") < 10)
         .select(col("doc_id").as("query_id"), col("text"))
-      def pin(df: DataFrame): (DataFrame, Long) = {
-        val r = df.rdd; r.localCheckpoint(); val n = r.count()
-        (spark.createDataFrame(r, df.schema), n)
+      Dedup.withCuts(spark, None) { cuts =>
+        val t0i = System.nanoTime()
+        val capIdx = cuts.cutLazy(TextAnalysis.bm25CappedIndexOf(corpus))
+        val nCap = capIdx.count()
+        val fullIdx = cuts.cutLazy(TextAnalysis.bm25IndexOf(corpus))
+        val nFull = fullIdx.count()
+        val tIdx = (System.nanoTime() - t0i) / 1e9
+        val t0c = System.nanoTime()
+        val capRows = TextAnalysis.bm25CappedScoreOf(queries, capIdx).count()
+        val tCap = (System.nanoTime() - t0c) / 1e9
+        val t0u = System.nanoTime()
+        val fullRows = TextAnalysis.bm25ScoreOf(queries, fullIdx).count()
+        val tUncap = (System.nanoTime() - t0u) / 1e9
+        s"| ${k}x | $nFull | $nCap | ${f"$tIdx%.1f"}s | $capRows | " +
+          s"${f"$tCap%.1f"}s | $fullRows | ${f"$tUncap%.1f"}s |"
       }
-      val t0i = System.nanoTime()
-      val (capIdx, nCap) = pin(TextAnalysis.bm25CappedIndexOf(corpus))
-      val (fullIdx, nFull) = pin(TextAnalysis.bm25IndexOf(corpus))
-      val tIdx = (System.nanoTime() - t0i) / 1e9
-      val t0c = System.nanoTime()
-      val capRows = TextAnalysis.bm25CappedScoreOf(queries, capIdx).count()
-      val tCap = (System.nanoTime() - t0c) / 1e9
-      val t0u = System.nanoTime()
-      val fullRows = TextAnalysis.bm25ScoreOf(queries, fullIdx).count()
-      val tUncap = (System.nanoTime() - t0u) / 1e9
-      s"| ${k}x | $nFull | $nCap | ${f"$tIdx%.1f"}s | $capRows | " +
-        s"${f"$tCap%.1f"}s | $fullRows | ${f"$tUncap%.1f"}s |"
     }
     if (sections("bm25cap")) {
       println()
@@ -1038,29 +1039,29 @@ object Scale {
       val batch = graft.sources.Tables.fanOut(
           graft.sources.Tables.documents(spark, baseDir))
         .filter(col("doc_id") % 2 === 1)
-      def pin(df: DataFrame): (DataFrame, Long) = {
-        val r = df.rdd; r.localCheckpoint(); val n = r.count()
-        (spark.createDataFrame(r, df.schema), n)
+      Dedup.withCuts(spark, None) { cuts =>
+        val t0i = System.nanoTime()
+        val hashes = cuts.cutLazy(TextAnalysis.corpusHashIndexOf(corpus))
+        val nHash = hashes.count()
+        val evalG = cuts.cutLazy(TextAnalysis.evalGramSetOf(
+          corpus.filter(col("doc_id") % TextAnalysis.EvalMod === 0)))
+        val nEval = evalG.count()
+        val tokd = corpus.select(col("doc_id"),
+          (col("lang") === "en").as("is_target"),
+          graft.functions.TextFunctions.tokenize(col("text")).as("toks"))
+        val model = cuts.cut(TextAnalysis.dsirModelOf(
+          TextAnalysis.dsirBucketsFromToks(tokd)))
+        val tIdx = (System.nanoTime() - t0i) / 1e9
+        val t0s = System.nanoTime()
+        val flags = TextAnalysis.curationFlagsOf(batch, hashes, evalG, model)
+          .collect()
+        val tScreen = (System.nanoTime() - t0s) / 1e9
+        val selected = flags.count(r => !r.isNullAt(1) && r.getBoolean(1) &&
+          r.getBoolean(3) && r.getBoolean(4) &&
+          r.getDouble(5) >= TextAnalysis.CurationMinWeight)
+        s"| ${k}x | $nHash | $nEval | ${f"$tIdx%.1f"}s | ${flags.length} | " +
+          s"$selected | ${f"$tScreen%.1f"}s |"
       }
-      val t0i = System.nanoTime()
-      val (hashes, nHash) = pin(TextAnalysis.corpusHashIndexOf(corpus))
-      val (evalG, nEval) = pin(TextAnalysis.evalGramSetOf(
-        corpus.filter(col("doc_id") % TextAnalysis.EvalMod === 0)))
-      val tokd = corpus.select(col("doc_id"),
-        (col("lang") === "en").as("is_target"),
-        graft.functions.TextFunctions.tokenize(col("text")).as("toks"))
-      val (model, _) = pin(TextAnalysis.dsirModelOf(
-        TextAnalysis.dsirBucketsFromToks(tokd)))
-      val tIdx = (System.nanoTime() - t0i) / 1e9
-      val t0s = System.nanoTime()
-      val flags = TextAnalysis.curationFlagsOf(batch, hashes, evalG, model)
-        .collect()
-      val tScreen = (System.nanoTime() - t0s) / 1e9
-      val selected = flags.count(r => !r.isNullAt(1) && r.getBoolean(1) &&
-        r.getBoolean(3) && r.getBoolean(4) &&
-        r.getDouble(5) >= TextAnalysis.CurationMinWeight)
-      s"| ${k}x | $nHash | $nEval | ${f"$tIdx%.1f"}s | ${flags.length} | " +
-        s"$selected | ${f"$tScreen%.1f"}s |"
     }
     if (sections("curationinc")) {
       println()
@@ -1084,22 +1085,22 @@ object Scale {
         .filter(col("doc_id") % 2 === 1)
       val queries = batch.filter(col("doc_id") < 10)
         .select(col("doc_id").as("query_id"), col("text"))
-      val t0i = System.nanoTime()
-      val snap = TextAnalysis.bm25Postings(corpus)
-      val snapMat = { val r = snap.rdd; r.localCheckpoint(); r.count(); r }
-      val nPost = snapMat.count()
-      val tSnap = (System.nanoTime() - t0i) / 1e9
-      val snapDf = spark.createDataFrame(snapMat, snap.schema)
-      val t0m = System.nanoTime()
-      val served = TextAnalysis.bm25ScoreOf(queries,
-        TextAnalysis.bm25MergedIndexOf(snapDf, batch)).count()
-      val tMerge = (System.nanoTime() - t0m) / 1e9
-      val t0f = System.nanoTime()
-      val full = TextAnalysis.bm25ScoreOf(queries,
-        TextAnalysis.bm25IndexOf(corpus.unionByName(batch))).count()
-      val tFull = (System.nanoTime() - t0f) / 1e9
-      s"| ${k}x | $nPost | ${f"$tSnap%.1f"}s | $served | ${f"$tMerge%.1f"}s | " +
-        s"$full | ${f"$tFull%.1f"}s |"
+      Dedup.withCuts(spark, None) { cuts =>
+        val t0i = System.nanoTime()
+        val snap = cuts.cut(TextAnalysis.bm25Postings(corpus))
+        val nPost = snap.count()
+        val tSnap = (System.nanoTime() - t0i) / 1e9
+        val t0m = System.nanoTime()
+        val served = TextAnalysis.bm25ScoreOf(queries,
+          TextAnalysis.bm25MergedIndexOf(snap, batch)).count()
+        val tMerge = (System.nanoTime() - t0m) / 1e9
+        val t0f = System.nanoTime()
+        val full = TextAnalysis.bm25ScoreOf(queries,
+          TextAnalysis.bm25IndexOf(corpus.unionByName(batch))).count()
+        val tFull = (System.nanoTime() - t0f) / 1e9
+        s"| ${k}x | $nPost | ${f"$tSnap%.1f"}s | $served | ${f"$tMerge%.1f"}s | " +
+          s"$full | ${f"$tFull%.1f"}s |"
+      }
     }
     if (sections("bm25merge")) {
       println()

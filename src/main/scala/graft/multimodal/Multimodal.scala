@@ -558,7 +558,7 @@ object Multimodal {
     * 10.1 s, SCALE.md round-8 refresh #2), the signature of paying
     * the catalog decode the screen exists to avoid. */
   def phashCatalogIndexCached(spark: SparkSession, dir: String): DataFrame =
-    Dedup.memoizedFrame(spark, s"media_phash_index#$dir") {
+    Dedup.memoizedFrame(spark, "media_phash_index", dir, "documents.parquet") {
       imageHashIndexOf(
         dHash(plantedMediaSlice(spark, dir, emitBase = true, emitEdits = false))
           .toDF())
@@ -567,7 +567,7 @@ object Multimodal {
   /** The base AUDIO catalog's banded fingerprint index — the
     * [[phashCatalogIndexCached]] contract on the audio modality. */
   def audioCatalogIndexCached(spark: SparkSession, dir: String): DataFrame =
-    Dedup.memoizedFrame(spark, s"media_audio_index#$dir") {
+    Dedup.memoizedFrame(spark, "media_audio_index", dir, "documents.parquet") {
       imageHashIndexOf(
         audioFingerprint(
           plantedAudioSlice(spark, dir, emitBase = true, emitEdits = false))
@@ -1117,7 +1117,7 @@ object Multimodal {
   /** The base VIDEO catalog's banded fingerprint index — the
     * [[phashCatalogIndexCached]] contract on the video modality. */
   def videoCatalogIndexCached(spark: SparkSession, dir: String): DataFrame =
-    Dedup.memoizedFrame(spark, s"media_video_index#$dir") {
+    Dedup.memoizedFrame(spark, "media_video_index", dir, "documents.parquet") {
       imageHashIndexOf(
         videoFingerprint(
           plantedVideoSlice(spark, dir, emitBase = true, emitEdits = false))

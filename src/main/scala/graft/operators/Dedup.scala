@@ -567,7 +567,7 @@ object Dedup {
   private final case class MemoEntry(df: DataFrame, session: SparkSession,
                                      release: () => Unit)
 
-  /** MATERIALIZED minhash pair graph, memoized per (session, corpus dir).
+  /** MATERIALIZED minhash pair graph, memoized per (session, snapshot).
     *
     * Four registered queries derive from the same pair set
     * ([[minhashLsh]], [[nearDupComponents]], [[dedupedCorpus]],
@@ -575,28 +575,26 @@ object Dedup {
     * shingle → signature → band-join pipeline from the scan — the single
     * most expensive subplan in the library. The memo computes it once
     * per SESSION as an owned checkpointed RDD (the same pattern as
-    * [[componentsOf]]'s rounds) and every consumer reads the cached
+    * [[componentsOfManaged]]'s rounds) and every consumer reads the cached
     * blocks. The pair set is small by construction — only near-dup PAIRS
     * survive banding + the 0.5 threshold, a thin slice of any real
     * corpus — so pinning it for the session lifetime is the right trade
     * (a session building these queries is a dedup pipeline run; the
-    * pairs are its working set). Deterministic content (md5-derived
-    * hashes, no rand/mii) means the cache can never go stale for a
-    * fixed corpus dir. An ordinary [[memoizedFrame]] key. */
+    * pairs are its working set). An ordinary [[memoizedFrame]] entry. */
   private[graft] def minhashPairsCached(spark: SparkSession, dir: String): DataFrame =
-    memoizedFrame(spark, s"minhash_pairs#$dir")(minhashPairsPlan(spark, dir))
+    memoizedFrame(spark, "minhash_pairs", dir, "documents.parquet")(
+      minhashPairsPlan(spark, dir))
 
-  /** Generic per-(session, key) memo of an eagerly-materialized frame —
-    * the minhash pair graph, the component labels, the ANN index frames
-    * and every other shared operator artifact live here.
-    *
-    * Lifecycle contract: keys are `sessionUUID#key` — unique per
-    * session, so a new session can never receive a frame bound to a
-    * dead one. Entries for stopped sessions are swept (and their
-    * storage freed) on every cached access; [[clearMemos]] frees
-    * everything eagerly (bench and test hook, and the release valve for
-    * long-lived sessions whose corpus dir CONTENTS changed — the memo
-    * key is the path, not the data). Honors [[CheckpointDirConf]] for
+  /** Generic memo of an eagerly-materialized frame — the minhash pair
+    * graph, the component labels, the ANN index frames and every other
+    * shared operator artifact live here, keyed by the session's UUID,
+    * `tag` and the [[ScaleTechniques.fingerprint]] of `dir/srcName`, the
+    * table the build reads: a new session never receives a frame bound
+    * to a dead one, and a rewritten table builds a fresh frame. Entries
+    * for stopped sessions are swept (and their storage freed) on every
+    * cached access; [[clearMemos]] frees everything eagerly (bench and
+    * test hook, and what frees superseded snapshots in a long-lived
+    * session). Honors [[CheckpointDirConf]] for
     * executor-loss-tolerant materialization. Every access, hit or
     * build, is logged to [[recordTouches]].
     *
@@ -607,9 +605,9 @@ object Dedup {
     * losing build. */
   private val frameMemo =
     new java.util.concurrent.ConcurrentHashMap[String, MemoEntry]()
-  private[graft] def memoizedFrame(spark: SparkSession, key: String)
-      (plan: => DataFrame): DataFrame =
-    memoized(spark, key) {
+  private[graft] def memoizedFrame(spark: SparkSession, tag: String,
+      dir: String, srcName: String)(plan: => DataFrame): DataFrame =
+    memoized(spark, tag, dir, srcName) {
       withCuts(spark) { cuts =>
         val df = cuts.cut(plan)
         (df, cuts.handOff(df))
@@ -618,9 +616,10 @@ object Dedup {
 
   /** [[memoizedFrame]] for a build that materializes itself: `build`
     * returns the frame plus the hook that frees it. */
-  private def memoized(spark: SparkSession, key: String)
-      (build: => (DataFrame, () => Unit)): DataFrame = {
+  private def memoized(spark: SparkSession, tag: String, dir: String,
+      srcName: String)(build: => (DataFrame, () => Unit)): DataFrame = {
     sweepStopped()
+    val key = s"$tag#${ScaleTechniques.fingerprint(new java.io.File(dir, srcName).getPath)}"
     touch(key)
     val k = memoKey(spark, key)
     val hit = frameMemo.get(k)
@@ -667,9 +666,9 @@ object Dedup {
     * identityHashCode collision the old key construction allowed. */
   private val sessionIds = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, String]())
-  private def memoKey(spark: SparkSession, dir: String): String =
+  private def memoKey(spark: SparkSession, key: String): String =
     sessionIds.computeIfAbsent(spark, _ => java.util.UUID.randomUUID().toString) +
-      "#" + dir
+      "#" + key
 
   /** Free every memoized frame and retained result: unpersist the
     * backing blocks, delete reliable-checkpoint files, empty both maps.
@@ -685,8 +684,7 @@ object Dedup {
       }
       m.clear()
     }
-    // the DPP fact layout is the one on-DISK memo — same staleness
-    // contract, same release valve
+    // the on-disk layouts published this JVM, same release valve
     ScaleTechniques.clearDppFactDirs()
   }
 
@@ -699,9 +697,8 @@ object Dedup {
     * [[retainResult]] keeps the LATEST result per (session, key) and
     * retires the previous one, bounding the pinned storage at one
     * result frame per query family; a caller holding a PRIOR call's
-    * frame must not re-invoke the same query first (the memo-staleness
-    * contract's trade, applied to results). Swept and cleared with the
-    * memo maps. */
+    * frame must not re-invoke the same query first. Swept and cleared
+    * with the memo maps. */
   private val retainedResults =
     new java.util.concurrent.ConcurrentHashMap[String, MemoEntry]()
   private def retainResult(spark: SparkSession, key: String, rdd: RDD[_],
@@ -876,25 +873,28 @@ object Dedup {
     try rdd.unpersist(blocking = false)
     catch { case scala.util.control.NonFatal(_) => () }
     rdd.getCheckpointFile.foreach { f =>
-      try {
-        val p = new org.apache.hadoop.fs.Path(f)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(p, true)
-        val parent = p.getParent
-        if (fs.listStatus(parent).isEmpty) fs.delete(parent, false)
-      } catch { case scala.util.control.NonFatal(_) => () } // best-effort cleanup
+      val p = new org.apache.hadoop.fs.Path(f)
+      try p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      catch { case scala.util.control.NonFatal(_) => () } // best-effort cleanup
+      deleteIfEmpty(spark, p.getParent)
     }
   }
 
-  /** Run `body` with the context checkpoint dir set to `dir`, restoring
-    * the previous LOCATION after — `setCheckpointDir` mutates global
+  /** Delete the directory `dir` if it exists and is empty; best-effort. */
+  private def deleteIfEmpty(spark: SparkSession, dir: org.apache.hadoop.fs.Path): Unit =
+    try {
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(dir) && fs.listStatus(dir).isEmpty) fs.delete(dir, false)
+    } catch { case scala.util.control.NonFatal(_) => () }
+
+  /** Run `body` with the context checkpoint dir set to `dir`, then put
+    * the previous value back exactly — `setCheckpointDir` mutates global
     * SparkContext state, and leaving it pointed at the last caller's dir
-    * breaks concurrent users of the same context. Exact restore is
-    * impossible (every set resolves to a NEW UUID subdir), so the
-    * restore re-sets the previous resolved dir's PARENT — the path the
-    * caller originally passed — keeping their checkpoints rooted where
-    * they intended with no per-call nesting. Checkpoint FILES written
-    * under our dir outlive the restore and are deleted by [[retire]]. */
+    * breaks concurrent users of the same context. Every set resolves to
+    * a NEW subdirectory of `dir`; the scope deletes its own at exit if
+    * no checkpoint file is left in it. Checkpoint FILES written there
+    * outlive the scope and are deleted by [[retire]], with the
+    * subdirectory once its last file is gone. */
   private def withCheckpointDir[T](spark: SparkSession,
                                   dir: Option[String])(body: => T): T =
     dir match {
@@ -903,12 +903,10 @@ object Dedup {
         val sc = spark.sparkContext
         val prev = sc.getCheckpointDir
         sc.setCheckpointDir(d)
+        val mine = sc.getCheckpointDir
         try body finally {
-          prev match {
-            case Some(p) => sc.setCheckpointDir(
-              new org.apache.hadoop.fs.Path(p).getParent.toString)
-            case None => sc.setCheckpointDir(null)
-          }
+          org.apache.spark.GraftSparkBridge.restoreCheckpointDir(sc, prev)
+          mine.foreach(m => deleteIfEmpty(spark, new org.apache.hadoop.fs.Path(m)))
         }
     }
 
@@ -1554,7 +1552,7 @@ object Dedup {
     // singletons) and c1 keeps the arithmetic exact — in a Zipf corpus
     // most shingles are df=1, so this is the difference between hauling
     // the corpus and hauling its repeated fraction.
-    // MATERIALIZE docsets once (the componentsOf/kmeansTrainedCents
+    // MATERIALIZE docsets once (the CC-round/kmeansTrainedCents
     // checkpoint discipline): the frame feeds FOUR plan legs — both
     // prefix sides of the candidate self-join and both array sides of
     // the verify — and without the checkpoint each leg re-runs the
@@ -1669,8 +1667,8 @@ object Dedup {
                                         t: Double = PrefixJoinThreshold): DataFrame =
     prefixStages(docs, t)._2
 
-  /** Iteration cap for [[componentsOf]]. With pointer jumping each round
-    * at least halves every propagation chain, so convergence needs
+  /** Iteration cap for [[componentsOfManaged]]. With pointer jumping
+    * each round at least halves every propagation chain, so convergence needs
     * O(log₂ of the largest component's diameter) rounds — 50 covers any
     * graph that fits in storage by ~2⁵⁰ margin. The loop exits early at
     * the actual fixpoint; the cap only bounds a pathological run. */
@@ -1697,7 +1695,7 @@ object Dedup {
     * executor storage). `propagated` is materialized too, so the
     * pointer-jump self-join reads it from cache instead of re-running
     * the round's joins on both legs. */
-  /** A [[componentsOf]] result whose storage the CALLER owns: `labels`
+  /** A [[componentsOfManaged]] result whose storage the CALLER owns: `labels`
     * is the converged (id, component) frame, still backed by persisted
     * blocks; `release()` unpersists them (and deletes their reliable-
     * checkpoint files, if any) once every downstream action on `labels`
@@ -1709,12 +1707,9 @@ object Dedup {
   final case class ComponentsHandle(labels: DataFrame, rounds: Int,
                                     release: () => Unit)
 
-  private[graft] def componentsOf(pairs: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame =
-    componentsOfManaged(pairs, checkpointDir).labels
-
-  /** [[componentsOf]] returning a [[ComponentsHandle]] so the final
-    * round's storage can be freed.
+  /** Connected components of the undirected (doc_a, doc_b) pair graph:
+    * every node labelled with the minimum id reachable from it, as a
+    * [[ComponentsHandle]] so the final round's storage can be freed.
     *
     * `checkpointDir = None` (default) truncates lineage per round with
     * `localCheckpoint` — blocks live on executors, fastest, but NOT
@@ -1726,9 +1721,15 @@ object Dedup {
     * Both modes converge to identical labels (suite-pinned). */
   private[graft] def componentsOfManaged(pairs: DataFrame,
       checkpointDir: Option[String] = None): ComponentsHandle =
-    withCuts(pairs.sparkSession, checkpointDir)(componentsIn(_, pairs))
+    withCuts(pairs.sparkSession, checkpointDir) { cuts =>
+      val (last, rounds) = componentsIn(cuts, pairs)
+      ComponentsHandle(last.select("id", "component"), rounds, cuts.handOff(last))
+    }
 
-  private def componentsIn(cuts: Cuts, pairs: DataFrame): ComponentsHandle = {
+  /** The pointer-jumping loop in `cuts`: returns the converged round
+    * (id, component, old) — a cut `cuts` still owns, so the caller hands
+    * it off or keeps it — and the number of rounds. */
+  private def componentsIn(cuts: Cuts, pairs: DataFrame): (DataFrame, Int) = {
     // every round is an owned cut: truncates lineage like
     // Dataset.localCheckpoint, but keeps the handle so each superseded
     // round's blocks AND checkpoint files are retired as soon as the
@@ -1798,7 +1799,7 @@ object Dedup {
       labelsCut = next
       iter += 1
     }
-    ComponentsHandle(labels, iter, cuts.handOff(labelsCut))
+    (labelsCut, iter)
   }
 
   /** Converged component labels over the memoized pair graph, an
@@ -1810,13 +1811,13 @@ object Dedup {
     * the [[ComponentsHandle]] — the deliberate, bounded version of what
     * would otherwise be a per-call leak. */
   private[graft] def componentsCached(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, s"components#$dir") {
+    memoized(spark, "components", dir, "documents.parquet") {
       val pairs = minhashPairsCached(spark, dir).select("doc_a", "doc_b")
-      val handle = withCuts(spark)(componentsIn(_, pairs))
+      val handle = componentsOfManaged(pairs, confCheckpointDir(spark))
       (handle.labels, handle.release)
     }
 
-  /** Near-dup CLUSTERS: [[componentsOf]] over the [[minhashLsh]] pair
+  /** Near-dup CLUSTERS: [[componentsOfManaged]] over the [[minhashLsh]] pair
     * graph. One row per clustered document: (doc_id, component) where
     * component is the cluster's minimum doc_id. The oracle is a DuckDB
     * recursive CTE computing min-reachable-id over the same pair set, so
@@ -1839,7 +1840,7 @@ object Dedup {
     *  1. every old endpoint COLLAPSES to its old component label (old
     *     labels are min-even-ids, arriving ids are odd — the two node
     *     spaces are disjoint by parity, so no tagging column is needed);
-    *  2. the same pointer-jumping kernel ([[componentsOf]]) runs on the
+    *  2. the same pointer-jumping kernel ([[componentsOfManaged]]) runs on the
     *     BATCH-sized delta graph (arriving docs + touched components);
     *  3. a delta label is min(old labels, odd ids) of the merged set =
     *     the global min doc id — so incremental ≡ full recompute, which
@@ -1862,8 +1863,16 @@ object Dedup {
       .filter(col("doc_a") % 2 === 0 && col("doc_b") % 2 === 0)
     val deltaPairs = pairs
       .filter(col("doc_a") % 2 === 1 || col("doc_b") % 2 === 1)
-    ccIncrementalFrom(componentsOf(oldPairs), deltaPairs)
+    ccIncrementalFrom(keptComponents(oldPairs, "ccIncrementalOld"), deltaPairs)
   }
+
+  /** The converged (id, component) labels of `pairs`, their last round
+    * held in the retained-result slot `key`: the incremental-CC frame
+    * reads them lazily, after the scope exits. */
+  private def keptComponents(pairs: DataFrame, key: String): DataFrame =
+    withCuts(pairs.sparkSession) { cuts =>
+      cuts.keep(key, componentsIn(cuts, pairs)._1).select("id", "component")
+    }
 
   /** The incremental-CC KERNEL: merge a batch's `deltaPairs` into the
     * PRECOMPUTED `oldLab` (id, component) state — the measurement
@@ -1886,7 +1895,7 @@ object Dedup {
       .filter(col("na") =!= col("nb"))
       .select(col("na").as("doc_a"), col("nb").as("doc_b"))
       .distinct()
-    val deltaLab = componentsOf(deltaEdges) // (id = delta node, component)
+    val deltaLab = keptComponents(deltaEdges, "ccIncrementalDelta") // (delta node, label)
     val newDocs = deltaLab.filter(col("id") % 2 === 1)
       .select(col("id").as("doc_id"), col("component"),
         lit("new").as("status"))

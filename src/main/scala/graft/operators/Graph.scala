@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
 /** Iterative GRAPH analytics expressed relationally — the second graph
-  * workload beside connected-components (Dedup.componentsOf): PageRank
-  * over the part co-purchase graph. Link analysis over a derived graph
+  * workload beside connected-components
+  * (Dedup.componentsOfManaged): PageRank over the part co-purchase
+  * graph. Link analysis over a derived graph
   * is a training-data staple (domain authority for crawl prioritization,
   * citation rank for document weighting); the co-purchase graph stands in
   * because the corpus ships no explicit edges.
@@ -15,8 +16,9 @@ import graft.sources.Tables
   * state, no collect — so the loop runs at any corpus scale with the
   * canonical one-shuffle-per-iteration cost, and a fixed iteration count
   * keeps the cross-engine oracle an unrolled CTE chain (the same
-  * fixed-point-vs-fixed-iterations trade [[Dedup.componentsOf]] documents
-  * for CC; production runs to convergence with the identical step body).
+  * fixed-point-vs-fixed-iterations trade
+  * [[Dedup.componentsOfManaged]] documents for CC; production runs to
+  * convergence with the identical step body).
   */
 object Graph {
 
@@ -313,14 +315,6 @@ object Graph {
       while (delta >= PrTol && rounds < PrMaxRounds) {
         val depth = math.min(PrUnrollDepth, PrMaxRounds - rounds)
         val roundFrame = (1 to depth).foldLeft(cur)(stepCarry).drop("r")
-        // plans/<round> audit hook: a loop query's registered frame is
-        // the retained result (an ExistingRDD scan), so the auditable
-        // plan is ONE unrolled batch's dataflow — dumped pre-cut on
-        // demand
-        if (rounds == 0 && sys.env.contains("SPARK_GRAFT_DUMP_ROUND"))
-          System.err.println("[round-plan pagerank_conv]\n" +
-            roundFrame.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode))
         val next = cuts.cutKeyedLazy(roundFrame)
         val row = next.agg(
           sum(s"dl1").as("d1"),

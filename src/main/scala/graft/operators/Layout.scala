@@ -685,13 +685,12 @@ object Layout {
 
   /** Per-root PERSISTED Bloom signature artifact — the manifest-scale
     * index a deployment stores beside the layout instead of re-deriving
-    * it from the corpus at every serve. Written once per root CONTENT
-    * (fingerprint-keyed over the shard dirs' file listing, so a reused
-    * path with different data can never serve stale signatures) as two
-    * parquet frames: `sizes` (shard, n_keys, mbits, max_id, min_id —
-    * the id extents machine-check the probe-classification
-    * precondition without a corpus scan) and `words` (shard, word,
-    * bits). This is the r11
+    * it from the corpus at every serve. Written once per root snapshot
+    * (keyed by the root's file listing, so a reused path with different
+    * data gets new signatures) as two parquet frames: `sizes` (shard,
+    * n_keys, mbits, max_id, min_id — the id extents machine-check the
+    * probe-classification precondition without a corpus scan) and
+    * `words` (shard, word, bits). This is the r11
     * ADVICE upgrade from claim-scoping to implementation: the serve
     * path is now probes × the loaded index + the pruned read, with NO
     * corpus-wide signature rebuild. Per-root independence (each root's
@@ -700,35 +699,17 @@ object Layout {
     * Registered with the write-once layout machinery, so `clearMemos`
     * releases it and each cold bench pass pays the build honestly.
     *
-    * Fingerprint granularity: the key hashes each data file's (name,
-    * length, mtime-ms) — the same contract as
-    * [[ScaleTechniques.layoutPath]]. A same-length rewrite of a shard
-    * file landing in the SAME millisecond would collide; no writer in
-    * this repo can produce that (every layout publish goes through
-    * fresh staged directories), but an external overwrite-in-place
-    * would need a content hash here. Artifacts for superseded
-    * fingerprints are swept only when registered in this JVM
-    * (`clearMemos`); across JVMs they age out with the temp dir. */
+    * The key is the root's [[ScaleTechniques.fingerprint]] (its
+    * granularity caveat applies). Artifacts for superseded fingerprints
+    * are swept only when registered in this JVM (`clearMemos`); across
+    * JVMs they age out with the temp dir. */
   private[graft] def ensureBloomSigs(spark: SparkSession, root: String): String = {
-    val sigPath = {
-      val dirs = Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("shard="))
-        .sortBy(_.getName)
-      val fp = dirs.map { d =>
-        Option(d.listFiles()).getOrElse(Array.empty).filter(_.isFile)
-          .sortBy(_.getName)
-          .map(f => s"${d.getName}/${f.getName}:${f.length}:${f.lastModified}")
-          .mkString(",")
-      }.mkString(root + "#", ";", "")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      // v2: sizes carries min_id beside max_id (the absent-band
-      // disjointness check in bloomRunOf needs both ends); the tag bump
-      // makes pre-existing v1 artifacts unreachable rather than
-      // schema-mismatched
-      new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_bloomsig2_$key").getAbsolutePath
-    }
+    // v2: sizes carries min_id beside max_id (the absent-band
+    // disjointness check in bloomRunOf needs both ends); the tag bump
+    // makes pre-existing v1 artifacts unreachable rather than
+    // schema-mismatched
+    val sigPath = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_bloomsig2_${ScaleTechniques.fingerprint(root)}").getAbsolutePath
     ScaleTechniques.ensureLayout(sigPath) { tmp =>
       val frag = bloomFragOf(spark, Seq(root))
       val sizes = frag.groupBy("shard")

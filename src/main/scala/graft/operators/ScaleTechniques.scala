@@ -153,37 +153,37 @@ object ScaleTechniques {
       .join(dim, col(factKey) === col(dimKey))
   }
 
-  /** On-disk root of [[dppRevenueByMonth]]'s partitioned fact layout:
-    * one per corpus CONTENT under the JVM temp dir, written once
-    * (guarded by `_SUCCESS`) and read back as a path-partitioned parquet
-    * source. The key hashes the source parquet's (name, length, mtime)
-    * fingerprint alongside the path, so regenerating the data under the
-    * same dir changes the key instead of silently serving stale revenue
-    * — the path-only key was exactly the staleness `Dedup.clearMemos`
-    * releases elsewhere, so these dirs are also registered for that
-    * sweep ([[clearDppFactDirs]]). */
-  private def dppFactPath(dir: String): String =
-    layoutPath(dir, "lineitem.parquet", "dpp_fact")
-
-  /** On-disk path of a per-corpus-CONTENT layout artifact under the
-    * JVM temp dir: the key hashes the source parquet's (name, length,
-    * mtime) fingerprint alongside the path, so regenerating the data
-    * under the same dir changes the key instead of silently serving a
-    * stale layout. Shared by the DPP fact layout and the z-order
-    * block layout ([[graft.operators.Layout.ensureZorderBlocks]]). */
+  /** On-disk path `graft_<tag>_<fingerprint>` of a per-snapshot layout
+    * artifact under the JVM temp dir, keyed by the [[fingerprint]] of
+    * `dir/srcName`. Shared by the DPP fact layout, the z-order and
+    * Hilbert block layouts, the Bloom fixtures and the ANN encode store. */
   private[graft] def layoutPath(dir: String, srcName: String,
-      tag: String): String = {
-    val src = new java.io.File(dir, srcName)
-    val files =
-      if (src.isFile) Array(src)
-      else Option(src.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(_.isFile).sortBy(_.getName)
-    val fp = files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString(dir + "#", ",", "")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+      tag: String): String =
     new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_$key").getAbsolutePath
+      s"graft_${tag}_${fingerprint(new java.io.File(dir, srcName).getPath)}")
+      .getAbsolutePath
+
+  /** The one snapshot key of graft's shared artifacts — memo frames
+    * (`Dedup.memoizedFrame`), layouts ([[layoutPath]]) and Bloom
+    * signatures (`Layout.ensureBloomSigs`): 12 hex characters of the MD5
+    * of `path` and the (name relative to `path`, length, mtime) of every
+    * file under it. Rewriting the data under the same path changes the
+    * key; `clearMemos` frees the superseded artifacts. Granularity: a
+    * rewrite that keeps every file's name and length and lands in the
+    * SAME millisecond collides. No writer in this repo does that (Spark
+    * writes fresh part-file names; layouts publish through fresh staged
+    * dirs); an external overwrite-in-place would need a content hash. */
+  private[graft] def fingerprint(path: String): String = {
+    import java.nio.file.{Files, FileVisitOption, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(path)
+    val files = if (!Files.exists(root)) Nil
+      else scala.util.Using.resource(Files.walk(root, FileVisitOption.FOLLOW_LINKS))(
+        _.iterator().asScala.filter(Files.isRegularFile(_)).toList)
+    val fp = files.map(f => s"${root.relativize(f)}:${Files.size(f)}:${f.toFile.lastModified}")
+      .sorted.mkString(path + "#", ",", "")
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
   }
 
   /** Layout dirs published via [[ensureLayout]] this JVM (the DPP fact
@@ -199,8 +199,8 @@ object ScaleTechniques {
 
   /** Delete EVERY `graft_<tag>_<12-hex>` layout artifact under the JVM
     * temp dir, including ones published by PRIOR JVMs. The write-once
-    * store is content-fingerprinted, so within one process it can never
-    * serve stale data — but the fingerprint of an immutable corpus
+    * store is keyed by [[fingerprint]], so a rewritten corpus gets new
+    * dirs — but the fingerprint of an immutable corpus
     * (`/root/testdata/...`) is stable across processes, and a FRESH
     * bench/verify invocation would LOAD the previous invocation's
     * artifacts instead of computing them: its `build:*` rows would
@@ -215,7 +215,7 @@ object ScaleTechniques {
     * invocation's build:dpp_layout row measured a parquet load (ADVICE
     * r13). The trailing 12-hex anchor still disambiguates the
     * fingerprint suffix from the tag (unit-pinned against every tag
-    * passed to [[layoutPath]]). */
+    * passed to [[layoutPath]], and the Bloom-signature tag). */
   private[graft] val LayoutSweepPattern =
     "^graft_[a-z0-9_]+_[0-9a-f]{12}(\\.(w|evict)[0-9]+)?$".r
 
@@ -268,7 +268,7 @@ object ScaleTechniques {
   private def ensureFactLayout(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     import graft.sources.Tables
-    ensureLayout(dppFactPath(dir)) { tmp =>
+    ensureLayout(layoutPath(dir, "lineitem.parquet", "dpp_fact")) { tmp =>
       Tables.lineitem(spark, dir)
         .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
         .write.mode("overwrite").partitionBy("ship_month")

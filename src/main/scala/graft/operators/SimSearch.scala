@@ -792,12 +792,6 @@ object SimSearch {
           .filter(col("n_members") > 0)
           .select(col("cent_id"), col("d"), expr("sv div n_members").as("c"),
             abs(expr("sv div n_members") - col("c_prev")).as("dl"))
-        // plans/<round> audit hook (the pagerank-conv convention): dump
-        // one round's pre-cut dataflow on demand
-        if (rounds == 0 && sys.env.contains("SPARK_GRAFT_DUMP_ROUND"))
-          System.err.println("[round-plan kmeans_conv]\n" +
-            roundFrame.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode))
         val next = cuts.cutLazy(roundFrame)
         delta = next.agg(sum("dl")).head().getLong(0)
         cuts.retire(cur)
@@ -814,7 +808,7 @@ object SimSearch {
     }
   }
 
-  // ---- THE PERSISTED ANN INDEX (memoized per session × corpus dir) ----
+  // ---- THE PERSISTED ANN INDEX (memoized per session × corpus snapshot) ----
   //
   // A production vector deployment trains its quantizers ONCE per corpus
   // snapshot and serves every query from the persisted artifacts; the
@@ -822,28 +816,26 @@ object SimSearch {
   // frames below — trained coarse centroids, the full per-vector L2
   // centroid ranking, the PQ codebook, the corpus PQ codes, and the
   // OPQ-rotated corpus with its own codebook and codes —
-  // materialize once per (session, dir) through Dedup's memo machinery
-  // (clearMemos-released, checkpoint-dir aware, build cost charged to
-  // the bench's `build:ann_train` row for the trained centroids and
-  // codebook, `build:ann_encode` for the rest) and every consumer reads
-  // the cached blocks. The `Of`-variants stay fully self-contained (tests
+  // materialize once per (session, embeddings snapshot) through Dedup's
+  // memo machinery (clearMemos-released, checkpoint-dir aware, build
+  // cost charged to the bench's `build:ann_train` row for the trained
+  // centroids and codebook, `build:ann_encode` for the rest) and every
+  // consumer reads the cached blocks. The `Of`-variants stay fully self-contained (tests
   // and the Scale harness call them on constructed/replicated frames).
-  // Content is deterministic for a fixed dir, so the cache can never go
-  // stale — the same contract as the minhash pair memo.
 
   private def kmCentsCached(spark: SparkSession, dir: String, e: DataFrame): DataFrame =
-    Dedup.memoizedFrame(spark, s"ann_kmcents#$dir")(
+    Dedup.memoizedFrame(spark, "ann_kmcents", dir, "embeddings.parquet")(
       kmeansTrainedCents(e, KmK, KmIters))
 
   private def kmRankedCached(spark: SparkSession, dir: String, e: DataFrame): DataFrame =
-    Dedup.memoizedFrame(spark, s"ann_kmranked#$dir")(
+    Dedup.memoizedFrame(spark, "ann_kmranked", dir, "embeddings.parquet")(
       annEncodeStore(spark, dir, e)._1)
 
   private def pqBookCached(spark: SparkSession, dir: String, e: DataFrame): DataFrame =
-    Dedup.memoizedFrame(spark, s"ann_book#$dir")(pqCodebook(e))
+    Dedup.memoizedFrame(spark, "ann_book", dir, "embeddings.parquet")(pqCodebook(e))
 
   private def pqCodesCached(spark: SparkSession, dir: String, e: DataFrame): DataFrame =
-    Dedup.memoizedFrame(spark, s"ann_codes#$dir")(
+    Dedup.memoizedFrame(spark, "ann_codes", dir, "embeddings.parquet")(
       annEncodeStore(spark, dir, e)._2)
 
   /** The PERSISTED encode artifacts of the primary IVF-PQ index for the
@@ -1547,7 +1539,7 @@ object SimSearch {
       .orderBy("vec_id").limit(IvfK)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
 
-  // the persisted snapshot-index frames, memoized per (session, dir)
+  // the persisted snapshot-index frames, memoized per (session, snapshot)
   // through the same lifecycle as the other ANN artifacts (swept by
   // clearMemos, build cost charged to the bench's `build:ann_encode`
   // row); `snap` is the even-id half — the standing snapshot/batch
@@ -1557,12 +1549,12 @@ object SimSearch {
 
   private def mergeCentsCached(spark: SparkSession, dir: String,
       e: DataFrame): DataFrame =
-    Dedup.memoizedFrame(spark, s"ann_merge_cents#$dir")(
+    Dedup.memoizedFrame(spark, "ann_merge_cents", dir, "embeddings.parquet")(
       mergeCoarseCentsOf(mergeSnap(e)))
 
   private def mergeBookCached(spark: SparkSession, dir: String,
       e: DataFrame): DataFrame =
-    Dedup.memoizedFrame(spark, s"ann_merge_book#$dir") {
+    Dedup.memoizedFrame(spark, "ann_merge_book", dir, "embeddings.parquet") {
       val snap = mergeSnap(e)
       pqCodebookOf(pqLongForm(snap), pqSeeds(snap), snap.select("vec_id"))
     }
@@ -1570,7 +1562,7 @@ object SimSearch {
   private def mergeSnapCodesCached(spark: SparkSession, dir: String,
       e: DataFrame): DataFrame = {
     val book = mergeBookCached(spark, dir, e)
-    Dedup.memoizedFrame(spark, s"ann_merge_codes#$dir")(
+    Dedup.memoizedFrame(spark, "ann_merge_codes", dir, "embeddings.parquet")(
       pqAssign(pqLongForm(mergeSnap(e)), book)
         .select("vec_id", "sub", "code_id"))
   }
@@ -1578,7 +1570,7 @@ object SimSearch {
   private def mergeSnapAssignCached(spark: SparkSession, dir: String,
       e: DataFrame): DataFrame = {
     val cents = mergeCentsCached(spark, dir, e)
-    Dedup.memoizedFrame(spark, s"ann_merge_assign#$dir")(
+    Dedup.memoizedFrame(spark, "ann_merge_assign", dir, "embeddings.parquet")(
       rankedAgainst(mergeSnap(e), cents)
         .filter(col("rnk") === 1).select("vec_id", "cent_id"))
   }
@@ -1913,14 +1905,14 @@ object SimSearch {
   def opqTopKOf(e: DataFrame): DataFrame = pqTopKOf(opqRotatedOf(e))
 
   private def opqRotCached(spark: SparkSession, dir: String, e: DataFrame): DataFrame =
-    Dedup.memoizedFrame(spark, s"ann_opqrot#$dir")(opqRotatedOf(e))
+    Dedup.memoizedFrame(spark, "ann_opqrot", dir, "embeddings.parquet")(opqRotatedOf(e))
 
   private def opqBookCached(spark: SparkSession, dir: String, e: DataFrame): DataFrame =
-    Dedup.memoizedFrame(spark, s"ann_opqbook#$dir")(
+    Dedup.memoizedFrame(spark, "ann_opqbook", dir, "embeddings.parquet")(
       pqCodebook(opqRotCached(spark, dir, e)))
 
   private def opqCodesCached(spark: SparkSession, dir: String, e: DataFrame): DataFrame =
-    Dedup.memoizedFrame(spark, s"ann_opqcodes#$dir")(
+    Dedup.memoizedFrame(spark, "ann_opqcodes", dir, "embeddings.parquet")(
       pqAssign(pqLongForm(opqRotCached(spark, dir, e)),
         opqBookCached(spark, dir, e)).select("vec_id", "sub", "code_id"))
 
@@ -1999,9 +1991,9 @@ object SimSearch {
     * [[semanticDedup]] and the hard-negative miners' exclusion sets.
     * Reuses the persisted [[KmK]]-cell serving quantizer when the
     * derived K coincides (no second training); otherwise trains and
-    * memoizes the derived-K assignment as its own per-(session, dir)
+    * memoizes the derived-K assignment as its own per-(session, snapshot)
     * index artifact. */
-  /** Corpus count memoized per (session, dir) through the same frame
+  /** Corpus count memoized per (session, snapshot) through the same frame
     * memo as the index artifacts: [[semAssignment]] derives K from it
     * on EVERY registered query construction, and without the memo each
     * build paid a corpus-count action even when the derived-K
@@ -2009,7 +2001,7 @@ object SimSearch {
     * frame costs a row fetch, not a scan. */
   private def corpusCountCached(spark: SparkSession, dir: String,
       e: DataFrame): Long =
-    Dedup.memoizedFrame(spark, s"ann_count#$dir")(
+    Dedup.memoizedFrame(spark, "ann_count", dir, "embeddings.parquet")(
       e.agg(count(lit(1)).as("n"))).head().getLong(0)
 
   private[graft] def semAssignment(spark: SparkSession, dir: String,
@@ -2018,7 +2010,7 @@ object SimSearch {
     if (k == KmK)
       kmRankedCached(spark, dir, e).filter(col("rnk") === 1)
         .select("vec_id", "cent_id")
-    else Dedup.memoizedFrame(spark, s"ann_semassign#$dir")(
+    else Dedup.memoizedFrame(spark, "ann_semassign", dir, "embeddings.parquet")(
       // capped = false: K = ⌈N/SemCellTarget⌉ here, so the 256·K train
       // cap is ≥ 4N and the sample would be the whole population — skip
       // the global-sort + N-row-broadcast sampling join entirely
@@ -2638,7 +2630,7 @@ object SimSearch {
     * per-round active set bounded at scale. */
   private[graft] def kcenterGeoCached(spark: SparkSession, dir: String,
       e: DataFrame): DataFrame =
-    Dedup.memoizedFrame(spark, s"kcenter_geo#$dir")(
+    Dedup.memoizedFrame(spark, "kcenter_geo", dir, "embeddings.parquet")(
       cellGeometryOf(e,
         semAssignment(spark, dir, e).withColumnRenamed("cent_id", "cell")))
 

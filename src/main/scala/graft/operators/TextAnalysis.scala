@@ -299,7 +299,7 @@ object TextAnalysis {
     * the same train-once/serve-many contract as the ANN index frames.
     * [[graft.Bench]] forces this build in its `build:*` accounting. */
   private[graft] def bpeMergesFrame(spark: SparkSession, dir: String): DataFrame =
-    Dedup.memoizedFrame(spark, s"bpe_merges#$dir") {
+    Dedup.memoizedFrame(spark, "bpe_merges", dir, "documents.parquet") {
       import spark.implicits._
       bpeMergesOf(Tables.fanOut(Tables.documents(spark, dir)), BpeTrainRounds)
         .toDF("round", "lhs", "rhs", "merged", "freq")
@@ -2147,7 +2147,7 @@ object TextAnalysis {
       .withColumn("nll",
         round(-(col("sum_fp").cast("double") / col("n_bigrams")) / 1e6, 6))
 
-  /** Memoized per (session, corpus dir) [[bigramDomOf]] — the r13
+  /** Memoized per (session, corpus snapshot) [[bigramDomOf]] — the r13
     * VERDICT #2 directive: `q_mix_doremi` and `q_mix_doremi_draw` each
     * recomputed the identical bigram-LM subtree (~3 s each at sf0.1,
     * the top shared-subtree item). The minhash-pairs memo pattern:
@@ -2157,7 +2157,7 @@ object TextAnalysis {
     * consumers' numbers stay honest cached-read costs. The frame is
     * |domains| rows — the memo pins 5 rows, never corpus-sized state. */
   private[graft] def bigramDomCached(spark: SparkSession, dir: String): DataFrame =
-    Dedup.memoizedFrame(spark, s"bigram_dom#$dir")(
+    Dedup.memoizedFrame(spark, "bigram_dom", dir, "documents.parquet")(
       bigramDomOf(Tables.fanOut(Tables.documents(spark, dir))))
 
   /** [[doremiWeights]] over any (doc_id, lang, text) frame. */
@@ -2416,7 +2416,7 @@ object TextAnalysis {
     * merge frames; [[graft.Bench]] charges the build to
     * `build:lr_model`. */
   private[graft] def lrModelCached(spark: SparkSession, dir: String): DataFrame =
-    Dedup.memoizedFrame(spark, s"lr_model#$dir")(
+    Dedup.memoizedFrame(spark, "lr_model", dir, "documents.parquet")(
       qualityLrModelOf(Tables.fanOut(Tables.documents(spark, dir)),
         QualityLrRate, QualityLrIters))
 

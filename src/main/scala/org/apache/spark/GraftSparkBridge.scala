@@ -1,12 +1,17 @@
 package org.apache.spark
 
 /** Core-side access shim (the [[org.apache.spark.sql.GraftSqlBridge]]
-  * pattern applied to SparkContext internals): the listener bus is
-  * `private[spark]`, and [[graft.Probe]] must drain it between passes —
-  * stage-completed events are delivered asynchronously, so reading the
-  * metrics listener without a drain races the last stages of the pass
-  * it is trying to attribute. */
+  * pattern applied to SparkContext internals): the listener bus and the
+  * checkpoint-dir field are `private[spark]`. [[graft.Probe]] must drain
+  * the bus between passes — stage-completed events are delivered
+  * asynchronously, so reading the metrics listener without a drain races
+  * the last stages of the pass it is trying to attribute. */
 object GraftSparkBridge {
+  /** Set the context's checkpoint dir to exactly `dir`: `setCheckpointDir`
+    * makes a fresh subdirectory on every call, so it cannot restore one. */
+  def restoreCheckpointDir(sc: SparkContext, dir: Option[String]): Unit =
+    sc.checkpointDir = dir
+
   /** The no-arg overload throws after a hardwired 10 s — short enough
     * that a bus lagging behind a heavy sf1 pass would crash the probe
     * mid-attribution. Wait generously, and degrade to a WARNING rather

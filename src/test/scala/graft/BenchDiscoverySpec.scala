@@ -14,9 +14,9 @@ class BenchDiscoverySpec extends AnyFunSuite {
   private val dir = "bench-discovery-synthetic"
 
   private def frameA(s: SparkSession, d: String): DataFrame =
-    Dedup.memoizedFrame(s, s"bench_spec_a#$d")(s.range(4).toDF("id"))
+    Dedup.memoizedFrame(s, "bench_spec_a", d, "documents.parquet")(s.range(4).toDF("id"))
   private def frameB(s: SparkSession, d: String): DataFrame =
-    Dedup.memoizedFrame(s, s"bench_spec_b#$d")(
+    Dedup.memoizedFrame(s, "bench_spec_b", d, "documents.parquet")(
       frameA(s, d).selectExpr("id * 2 AS id"))
 
   private val builds: Seq[(String, Bench.Build)] = Seq(

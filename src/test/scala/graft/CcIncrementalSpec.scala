@@ -53,15 +53,17 @@ class CcIncrementalSpec extends AnyFunSuite {
   }
 
   test("matches the batch recompute on the registered corpus slice") {
-    // incremental update set == full componentsOf restricted to
+    // incremental update set == full componentsOfManaged restricted to
     // components containing an odd doc (label agreement doc-by-doc)
     val dir = "/root/testdata/sf0.001"
     val pairs = Dedup.minhashPairsPlan(spark, dir)
       .select("doc_a", "doc_b")
     val inc = Dedup.ccIncrementalOf(pairs).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("component")).toMap
-    val fullLab = Dedup.componentsOf(pairs).collect()
+    val full = Dedup.componentsOfManaged(pairs)
+    val fullLab = try full.labels.collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("component")).toMap
+      finally full.release()
     val touchedComps = fullLab.collect { case (id, c) if id % 2 == 1 => c }.toSet
     val expected = fullLab.filter { case (_, c) => touchedComps(c) }
     assert(inc == expected)

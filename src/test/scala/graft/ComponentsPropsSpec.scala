@@ -39,8 +39,9 @@ class ComponentsPropsSpec extends Properties("componentsOf") {
 
   property("equals union-find on random graphs") = forAll(graphs) { pairs =>
     val expected = unionFind(pairs)
-    val got = Dedup.componentsOf(pairs.toDF("doc_a", "doc_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cc = Dedup.componentsOfManaged(pairs.toDF("doc_a", "doc_b"))
+    val got = try cc.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally cc.release()
     got == expected
   }
 }

@@ -103,4 +103,26 @@ class CutScopeSpec extends AnyFunSuite {
       assert(!spark.sparkContext.getCheckpointDir.exists(_.contains(dir.toString)))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
+
+  test("with a checkpoint dir, nested, lazy-only and handed-off scopes leave it empty") {
+    val dir = Files.createTempDirectory("graft-cut-scope-dirs")
+    def entries(): List[String] = dir.toFile.list().toList
+    val d = Some(dir.toString)
+    try {
+      val before = spark.sparkContext.getCheckpointDir
+      Dedup.withCuts(spark, d) { outer =>
+        outer.cut(frame(10))
+        Dedup.withCuts(spark, d)(_.cutKeyed(frame(20)))
+      }
+      Dedup.withCuts(spark, d)(_.cutLazy(frame(30)))
+      val (df, release) = Dedup.withCuts(spark, d) { cuts =>
+        val b = cuts.cut(frame(4))
+        (b, cuts.handOff(b))
+      }
+      assert(df.count() == 4L)
+      release()
+      assert(entries().isEmpty, s"left behind under $dir: ${entries()}")
+      assert(spark.sparkContext.getCheckpointDir == before)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
 }

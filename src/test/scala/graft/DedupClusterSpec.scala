@@ -18,9 +18,11 @@ class DedupClusterSpec extends AnyFunSuite {
 
   private val Sf = "/root/testdata/sf0.001"
 
-  private def comps(pairs: Seq[(Long, Long)]): Map[Long, Long] =
-    Dedup.componentsOf(pairs.toDF("doc_a", "doc_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def comps(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val cc = Dedup.componentsOfManaged(pairs.toDF("doc_a", "doc_b"))
+    try cc.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally cc.release()
+  }
 
   test("transitive chain A~B, B~C collapses to ONE component keeping only A") {
     // the greedy pairwise rule would drop both B and C even though A≁C;
@@ -62,8 +64,10 @@ class DedupClusterSpec extends AnyFunSuite {
     // the caller frees the final round's blocks through the handle
     val ckptDir = Files.createTempDirectory("graft-cc-ckpt").toString
     val pairs = Dedup.minhashPairsCached(spark, Sf).select("doc_a", "doc_b")
-    val viaLocal = Dedup.componentsOf(pairs)
+    val local = Dedup.componentsOfManaged(pairs)
+    val viaLocal = try local.labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally local.release()
     val managed = Dedup.componentsOfManaged(pairs, Some(ckptDir))
     val viaReliable = managed.labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

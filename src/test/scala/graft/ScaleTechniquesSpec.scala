@@ -151,9 +151,11 @@ class ScaleTechniquesSpec extends AnyFunSuite {
 
   test("sweepStaleLayouts pattern matches every layoutPath tag, incl. underscored ones") {
     // keep in sync with the layoutPath call sites (grep layoutPath():
-    // Layout.scala, SimSearch.scala, ScaleTechniques.dppFactPath)
+    // Layout.scala, SimSearch.scala, ScaleTechniques.ensureFactLayout) and
+    // the Bloom-signature dir (Layout.ensureBloomSigs)
     val tags = Seq("zblocks2", "hblocks", "frag", "bloomdelta", "bloomforget",
-      "compacted", "zdelta", "zforget", "hdelta", "hforget", "dpp_fact", "annenc")
+      "compacted", "zdelta", "zforget", "hdelta", "hforget", "dpp_fact", "annenc",
+      "bloomsig2")
     val hex12 = "0123456789ab"
     tags.foreach { tag =>
       val published = s"graft_${tag}_$hex12"
